@@ -25,11 +25,31 @@ Scale notes: event-time state is keyed by (window, type) / (user) —
 state store shards by key; the watermark bounds state size, which is
 what makes unbounded streams feasible at all. The replay fixture is
 driver-built (test harness only, not an operator path).
+
+Checkpoint files: every streaming query the engine starts goes through
+:func:`_run_stream`, which picks Spark's FileSystem-API checkpoint
+manager (FileSystemBasedCheckpointFileManager) whenever the checkpoint
+root is local — an unset ``spark.sql.streaming.checkpointLocation``
+(Spark then checkpoints into a private temp dir) or an engine-owned
+scratch run dir. Spark's default FileContext-API manager renames
+through Hadoop's local FileContext, which without the native Hadoop
+library shells out (readlink/chmod child processes) on every offset,
+commit and state-store file: thousands of forks per replay. The switch
+is safe there because each of those roots has exactly one writer (the
+query that created it) and a local POSIX rename is atomic, so the
+offset, commit and state logs keep their write-once guarantees; Spark
+still wraps the manager in its checksum manager for state files. A
+root the caller points at another filesystem (an object store has no
+atomic rename) keeps Spark's default manager, and the manager is set
+only for the engine's own query starts, never session-wide.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Callable
+from urllib.parse import urlsplit
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -44,15 +64,8 @@ from pyspark.sql.types import (
 from engine.canon import dround
 from engine.registry import register
 from engine.session import EVENTS_US_SQL, T, scratch_dir
+from engine.session import tiny_df as _tiny_df
 
-
-def _tiny_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Shared one-partition driver-local relation builder — see
-    :func:`engine.session.tiny_df` (moved there in r13 so batch keys
-    share it; streaming funnels were the first measured case)."""
-    from engine.session import tiny_df
-
-    return tiny_df(spark, rows, schema)
 
 # --------------------------------------------------------------------------
 # Batch-window forms (SQL-oracled)
@@ -176,8 +189,11 @@ def _jvm_shards(sf: str) -> int:
     at small state (4 shards beat 16 by ~2.2x at sf0.1, measured r10),
     while at 10x events the trade inverts mildly (8 beats 4 by ~15% at
     sf1x) — so shards grow with the event count, floored at 4, capped
-    at the Python-stateful family's 16. Footer-metadata count (~ms);
-    falls back to the small-state floor if footers are unreadable."""
+    at the Python-stateful family's 16. Those cost curves were measured
+    while every checkpoint and state file still forked shell commands
+    (before _run_stream's FileSystem-API manager) and are due for a
+    re-measure. Footer-metadata count (~ms); falls back to the
+    small-state floor if footers are unreadable."""
     from engine.session import table_rows
 
     n = table_rows(sf, "events") or 0
@@ -279,7 +295,104 @@ def _read_stream(
     )
 
 
-def _run_to_memory(stream_df: DataFrame, mode: str, shards: int = 16) -> DataFrame:
+#: test hook (duplicate-epoch injection, r13): when set to a callable,
+#: every foreachBatch callback is wrapped with it before the stream
+#: starts — tests re-deliver each epoch mid-stream and assert funnel
+#: rows and ledger bytes are unchanged (the idempotency contract
+#: foreachBatch's at-least-once delivery requires). None in production.
+_DC_BATCH_WRAPPER = None
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+#: see the module docstring for why this is safe on local roots
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _fs_manager_safe(root: str | None) -> bool:
+    """Whether a query checkpointing under ``root`` may use
+    _FS_CKPT_MANAGER: an unset root (Spark's private temp dir) or a
+    local path. Any other scheme (object stores, HDFS, ...) keeps
+    Spark's default manager."""
+    return root is None or urlsplit(root).scheme in ("", "file")
+
+
+@contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the block, then put each back to its previous
+    value — or unset it if it was unset — even when the block raises."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _run_stream(
+    stream_df: DataFrame,
+    sink: Callable,
+    *,
+    shards: int | None = None,
+    confs: dict[str, str] | None = None,
+    checkpoint: str | None = None,
+) -> None:
+    """Run ``stream_df`` to termination under Trigger.AvailableNow —
+    the one place the engine starts a streaming query. ``sink`` maps
+    the DataStreamWriter to a configured one (format / foreachBatch /
+    output mode; see :func:`_foreach_batch`). For the query's start the
+    session gets the state shard count ``shards`` (shuffle partitions
+    freeze into the state layout at start), the per-site ``confs``, and
+    the FileSystem-API checkpoint manager when the checkpoint root —
+    ``checkpoint`` or else the session's checkpointLocation — is local
+    (:func:`_fs_manager_safe`). The query runs on a clone of the session
+    taken at start, so every conf is restored once it terminates and
+    batch queries keep the session's own settings."""
+    spark = stream_df.sparkSession
+    settings = dict(confs or {})
+    if shards is not None:
+        settings["spark.sql.shuffle.partitions"] = str(shards)
+    root = checkpoint or spark.conf.get(
+        "spark.sql.streaming.checkpointLocation", None
+    )
+    if _fs_manager_safe(root):
+        settings[_CKPT_MANAGER_KEY] = _FS_CKPT_MANAGER
+    w = sink(stream_df.writeStream)
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", checkpoint)
+    with _session_confs(spark, settings):
+        w.trigger(availableNow=True).start().awaitTermination()
+
+
+def _foreach_batch(fn: Callable) -> Callable:
+    """``sink`` for :func:`_run_stream`: foreachBatch(fn), wrapped by
+    the _DC_BATCH_WRAPPER test hook when one is set."""
+    cb = fn if _DC_BATCH_WRAPPER is None else _DC_BATCH_WRAPPER(fn)
+    return lambda w: w.foreachBatch(cb)
+
+
+def _slice_stream(spark: SparkSession, schema: str, path: str) -> DataFrame:
+    """File-source replay of ``path`` with one slice file per
+    micro-batch (slices == batches)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+
+
+def _run_to_memory(
+    stream_df: DataFrame,
+    mode: str,
+    shards: int = 16,
+    confs: dict[str, str] | None = None,
+) -> DataFrame:
     """Run a streaming query to completion (availableNow) into a memory
     sink; returns the sink table.
 
@@ -291,27 +404,29 @@ def _run_to_memory(stream_df: DataFrame, mode: str, shards: int = 16) -> DataFra
     operators (the stream-stream join) have no Python workers to feed
     and their replay cost is LINEAR in shard count (~0.25 s/shard of
     commit overhead measured r10: 32→8.0 s, 16→4.75, 8→2.96, 4→2.30,
-    2→1.95, identical results) — they pass a smaller value. A real
-    cluster sizes this to keys/executor via submit conf instead.
-    Restored after the run so batch queries keep the session
-    setting."""
+    2→1.95, identical results) — they pass a smaller value. These shard
+    costs were measured while every checkpoint and state file still
+    forked shell commands (before _run_stream's FileSystem-API manager)
+    and are due for a re-measure. A real cluster sizes this to
+    keys/executor via submit conf instead. ``confs`` are extra per-query
+    session confs (_run_stream restores them).
+
+    The sink's temp view is dropped as soon as the DataFrame over it
+    exists: the DataFrame keeps the rows alive for the caller, and the
+    session no longer pins one ``stream_mem_N`` table per run."""
     _MEM_COUNTER[0] += 1
     name = f"stream_mem_{_MEM_COUNTER[0]}"
     spark = stream_df.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shards))
     try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
+        _run_stream(
+            stream_df,
+            lambda w: w.format("memory").queryName(name).outputMode(mode),
+            shards=shards,
+            confs=confs,
         )
-        q.awaitTermination()
+        return spark.table(name)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
 
 
 def _wm_late_oracle_sql() -> str:
@@ -531,35 +646,30 @@ def stream_stateful_tws(spark: SparkSession, sf: str) -> DataFrame:
         def close(self) -> None:
             pass
 
+    path = _replay_dir(spark, sf, late=False)
+    s = _read_stream(spark, path)
+    out_schema = StructType(
+        [StructField("user_id", LongType()), StructField("cnt", LongType())]
+    )
+    updates = s.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=CountProcessor(),
+        outputStructType=out_schema,
+        outputMode="Update",
+        timeMode="None",
+    )
     # transformWithState REQUIRES the RocksDB provider, but the conf is
     # session-wide — without restore it leaks into every streaming key
     # that runs later in the same session (measured: stream_stream_join
     # 4.5 s solo vs 5.1 s in-sweep under the leaked provider; review
-    # r10). Restore the prior provider once this key's query finished.
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    # r10). The runner restores the prior provider after the query.
+    mem = _run_to_memory(
+        updates,
+        "update",
+        confs={
+            "spark.sql.streaming.stateStore.providerClass": "org.apache."
+            "spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        },
     )
-    try:
-        path = _replay_dir(spark, sf, late=False)
-        s = _read_stream(spark, path)
-        out_schema = StructType(
-            [StructField("user_id", LongType()), StructField("cnt", LongType())]
-        )
-        updates = s.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=CountProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        mem = _run_to_memory(updates, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev)
     return mem.groupBy("user_id").agg(F.max("cnt").alias("cnt")).orderBy("user_id")
 
 
@@ -707,21 +817,11 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf: str) -> DataFrame:
         part.write.mode("overwrite").parquet(new_dir)
         state["cur"] = new_dir
 
-    from engine.session import tune
-
-    tune(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        q = (
-            _read_stream(spark, path, files_per_trigger=4)
-            .writeStream.foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_stream(
+        _read_stream(spark, path, files_per_trigger=4),
+        _foreach_batch(upsert),
+        shards=16,
+    )
     final = spark.read.schema(state_schema).parquet(state["cur"])
     return final.select(
         "event_type", "cnt", dround("sum_value", 2).alias("sum_value")
@@ -919,15 +1019,12 @@ def stream_rate_micro_batch(spark: SparkSession, sf: str) -> DataFrame:
             .option("advanceMillisPerBatch", 1000)
             .load()
         )
-        q = (
-            s.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        _run_stream(
+            s,
+            lambda w: w.format("parquet").option("path", out)
+            .outputMode("append"),
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
     rows = spark.read.parquet(out)
     return (
         rows.groupBy(F.window("timestamp", "2 seconds").alias("w"))
@@ -1116,14 +1213,6 @@ _DC_COMPACT_FILES = 8
 #: values, so the cap stays in the same bounded class as _dc_buckets.
 _DC_DYNFILTER_CAP = 4096
 
-#: test hook (duplicate-epoch injection, r13): when set to a callable,
-#: every ledger-writing foreachBatch callback is wrapped with it before
-#: the stream starts — tests re-deliver each epoch mid-stream and
-#: assert funnel rows and ledger bytes are unchanged (the idempotency
-#: contract foreachBatch's at-least-once delivery requires). None in
-#: production.
-_DC_BATCH_WRAPPER = None
-
 
 def _dc_buckets(spark: SparkSession, sf: str) -> int:
     """Ledger bucket count B for this corpus: ceil(N / target), clamped
@@ -1137,6 +1226,26 @@ def _dc_buckets(spark: SparkSession, sf: str) -> int:
     if n is None:
         n = T(spark, sf, "documents").count()
     return max(8, min(4096, -(-n // _DC_LEDGER_TARGET_ROWS)))
+
+
+def _dc_batch_parts(sf: str) -> int:
+    """Scale-adaptive batch shuffle parallelism (guide §2.2/§2.5) for
+    the document replays (dedup cascade, decontamination gate): sized
+    from the BATCH row count (corpus rows / slice count, from parquet
+    footers — no Spark job), targeting ~2k rows per task, floored at 4
+    and capped at the old fixed 16. At contract SFs a batch is a few
+    thousand rows and 16 fixed partitions were pure task/commit
+    overhead (AQE coalesces post-shuffle reads but the task launch +
+    committer cost of the partitioned appends is per-task); at cluster
+    scale the setting comes from submit conf exactly as before. Results
+    are partition-count-independent (funnel aggregates; one file per
+    touched pb dir per epoch either way, since each pb value hashes to
+    one task)."""
+    from engine.session import table_rows
+
+    nrows = table_rows(sf, "documents") or 0
+    per_batch = -(-nrows // _DC_FILES) if nrows else 4096
+    return max(4, min(16, per_batch // 2048))
 
 
 def _ledger_rows(root: str) -> int:
@@ -1267,9 +1376,8 @@ def _compact_ledger_buckets(
     ]
     if not due:
         return 0
-    prev = sp.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    overwrite = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    with _session_confs(sp, overwrite):
         df = sp.read.option("basePath", root).parquet(*[str(d) for d in due])
         if retain is not None:
             # retention-applying compaction (the TTL cascade): expired
@@ -1315,8 +1423,6 @@ def _compact_ledger_buckets(
             for e in d.glob("epoch=*"):
                 if e.name != "epoch=-1":
                     shutil.rmtree(e)
-    finally:
-        sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return len(due)
 
 
@@ -1395,6 +1501,7 @@ def _run_dedup_cascade(
     hroot = os.path.join(base, "hashes")
     broot = os.path.join(base, "buckets")
     nbuckets = _dc_buckets(spark, sf)
+    parts = _dc_batch_parts(sf)
     state = {"has_h": False, "has_b": False}
     funnel: list[tuple[int, int, int, int, int]] = []
     bcol = F.lit(nbuckets)
@@ -1717,46 +1824,18 @@ def _run_dedup_cascade(
                 }
             )
 
-    # Scale-adaptive batch shuffle parallelism (guide §2.2/§2.5): the
-    # cascade's per-batch shuffles are sized from the BATCH row count
-    # (corpus rows / slice count, from parquet footers — no Spark job),
-    # targeting ~2k rows per task, floored at 4 and capped at the old
-    # fixed 16. At contract SFs a batch is a few thousand rows and 16
-    # fixed partitions were pure task/commit overhead (AQE coalesces
-    # post-shuffle reads but the task launch + committer cost of the
-    # partitioned appends is per-task); at cluster scale the setting
-    # comes from submit conf exactly as before. Results are partition-
-    # count-independent (funnel aggregates; one file per touched pb dir
-    # per epoch either way, since each pb value hashes to one task).
-    from engine.session import table_rows
-
-    nrows = table_rows(sf, "documents") or 0
-    per_batch = -(-nrows // _DC_FILES) if nrows else 4096
-    parts = max(4, min(16, per_batch // 2048))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # executeTake escalation kill (guide §1/§7: many tiny sequential
     # jobs): the capped key collects (`distinct().limit(cap+1).collect()`)
     # and `.first()` otherwise run 1-partition-then-escalate job chains —
     # 2-3 driver-latency-bound jobs per action. Scanning all partitions
     # of these SMALL post-AQE relations in ONE job is strictly cheaper
     # here; restored after the run.
-    prev_take = spark.conf.get("spark.sql.limit.initialNumPartitions", "1")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    spark.conf.set("spark.sql.limit.initialNumPartitions", "1024")
-    cb = cascade if _DC_BATCH_WRAPPER is None else _DC_BATCH_WRAPPER(cascade)
-    try:
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .writeStream.foreachBatch(cb)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.limit.initialNumPartitions", prev_take)
+    _run_stream(
+        _slice_stream(spark, "doc_id long, text string", path),
+        _foreach_batch(cascade),
+        shards=parts,
+        confs={"spark.sql.limit.initialNumPartitions": "1024"},
+    )
     return _tiny_df(
         spark,
         funnel,
@@ -1868,11 +1947,13 @@ def _emb_replay_dir(spark: SparkSession, sf: str) -> str:
     return path
 
 
-#: the ingest replayed in pure SQL: batch = contiguous vec_id chunk (the
-#: fixture's slicing rule), assignment = argmin micro-rounded euclidean
-#: distance to the PINNED k-means centroids ({means} — the so_kmeans
-#: artifact both engines share), ties to the lower cluster id.
-_AI_SQL = """
+#: the ingest replayed in pure SQL — the CTE prefix every ANN ingest /
+#: maintenance oracle shares: batch = contiguous vec_id chunk (the
+#: fixture's slicing rule), assignment (``a``, rn = 1) = argmin
+#: micro-rounded euclidean distance to the PINNED k-means centroids
+#: ({means} — the so_kmeans artifact both engines share), ties to the
+#: lower cluster id.
+_AI_ASSIGN_CTES = """
     WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS e,
              ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS r,
@@ -1896,7 +1977,23 @@ _AI_SQL = """
       SELECT batch_id, vec_id, cluster, du,
              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY du, cluster) AS rn
       FROM d
-    )
+    )"""
+
+#: + the per-(batch, cell) ingest ``funnel``; the drift CTEs add its
+#: baseline (batch 0, ``base0``) and recent (last batch, ``rec``) rows
+_AI_FUNNEL_CTES = _AI_ASSIGN_CTES + """,
+    funnel AS (
+      SELECT batch_id, cluster AS cell, COUNT(*) AS n, SUM(du) AS sdu
+      FROM a WHERE rn = 1 GROUP BY 1, 2
+    )"""
+_AI_DRIFT_CTES = _AI_FUNNEL_CTES + """,
+    base0 AS (SELECT cell, n, sdu FROM funnel WHERE batch_id = 0),
+    rec AS (
+      SELECT cell, n, sdu FROM funnel
+      WHERE batch_id = (SELECT MAX(batch_id) FROM funnel)
+    )"""
+
+_AI_SQL = _AI_ASSIGN_CTES + """
     SELECT batch_id, cluster AS cell,
            COUNT(*) AS n_assigned,
            ROUND(SUM(du) / COUNT(*) / 1e6 * 1e6) / 1e6 AS avg_dist
@@ -2050,21 +2147,11 @@ def stream_ann_ingest(spark: SparkSession, sf: str) -> DataFrame:
             batch_df.sparkSession, store, "cell", ["vec_id"]
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    cb = ingest if _DC_BATCH_WRAPPER is None else _DC_BATCH_WRAPPER(ingest)
-    try:
-        q = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .writeStream.foreachBatch(cb)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_stream(
+        _slice_stream(spark, "vec_id long, embedding array<double>", path),
+        _foreach_batch(ingest),
+        shards=8,
+    )
     out = _tiny_df(
         spark, funnel, "batch_id int, cell int, n_assigned long, sdu long"
     )
@@ -2091,35 +2178,7 @@ _AI_TTL = 2
 #: the live count is a pure window sum over the funnel). Cells with
 #: live rows but no arrivals in batch k emit n_assigned=0 rows with a
 #: NULL avg_dist.
-_AIT_SQL = """
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS r,
-             COUNT(*) OVER () AS n
-      FROM embeddings
-    ),
-    b AS (
-      SELECT vec_id, e,
-             CAST(r // CAST(CEIL(n / {files}.0) AS BIGINT) AS INT) AS batch_id
-      FROM base
-    ),
-    m AS (SELECT cluster, mean FROM read_parquet('{means}/*.parquet')),
-    d AS (
-      SELECT b.batch_id, b.vec_id, m.cluster,
-             CAST(FLOOR(SQRT(list_reduce(list_transform(generate_series(1, 64),
-                  i -> (b.e[i] - m.mean[i]) * (b.e[i] - m.mean[i])),
-                  (x, y) -> x + y)) * 1e6 + 0.5) AS BIGINT) AS du
-      FROM b CROSS JOIN m
-    ),
-    a AS (
-      SELECT batch_id, vec_id, cluster, du,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY du, cluster) AS rn
-      FROM d
-    ),
-    funnel AS (
-      SELECT batch_id, cluster AS cell, COUNT(*) AS n, SUM(du) AS sdu
-      FROM a WHERE rn = 1 GROUP BY 1, 2
-    ),
+_AIT_SQL = _AI_FUNNEL_CTES + """,
     ks AS (SELECT DISTINCT batch_id FROM b),
     live AS (
       SELECT k.batch_id, f.cell, CAST(SUM(f.n) AS BIGINT) AS live_rows
@@ -2270,21 +2329,11 @@ def stream_ann_ingest_ttl(spark: SparkSession, sf: str) -> DataFrame:
             batch_df.sparkSession, store, "cell", ["vec_id"], retain=live
         )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    cb = ingest if _DC_BATCH_WRAPPER is None else _DC_BATCH_WRAPPER(ingest)
-    try:
-        q = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .writeStream.foreachBatch(cb)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_stream(
+        _slice_stream(spark, "vec_id long, embedding array<double>", path),
+        _foreach_batch(ingest),
+        shards=8,
+    )
     out = _tiny_df(
         spark,
         funnel,
@@ -2315,40 +2364,7 @@ _RG_NUM, _RG_DEN = 105, 100
 #: (same CTEs as _AI_SQL), then baseline = batch 0 vs recent = last
 #: batch per cell, full-outer so a cell seen in only one window still
 #: gets a decision. {files}/{means} as _AI_SQL.
-_RG_SQL = """
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS r,
-             COUNT(*) OVER () AS n
-      FROM embeddings
-    ),
-    b AS (
-      SELECT vec_id, e,
-             CAST(r // CAST(CEIL(n / {files}.0) AS BIGINT) AS INT) AS batch_id
-      FROM base
-    ),
-    m AS (SELECT cluster, mean FROM read_parquet('{means}/*.parquet')),
-    d AS (
-      SELECT b.batch_id, b.vec_id, m.cluster,
-             CAST(FLOOR(SQRT(list_reduce(list_transform(generate_series(1, 64),
-                  i -> (b.e[i] - m.mean[i]) * (b.e[i] - m.mean[i])),
-                  (x, y) -> x + y)) * 1e6 + 0.5) AS BIGINT) AS du
-      FROM b CROSS JOIN m
-    ),
-    a AS (
-      SELECT batch_id, vec_id, cluster, du,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY du, cluster) AS rn
-      FROM d
-    ),
-    funnel AS (
-      SELECT batch_id, cluster AS cell, COUNT(*) AS n, SUM(du) AS sdu
-      FROM a WHERE rn = 1 GROUP BY 1, 2
-    ),
-    base0 AS (SELECT cell, n, sdu FROM funnel WHERE batch_id = 0),
-    rec AS (
-      SELECT cell, n, sdu FROM funnel
-      WHERE batch_id = (SELECT MAX(batch_id) FROM funnel)
-    )
+_RG_SQL = _AI_DRIFT_CTES + """
     SELECT COALESCE(b.cell, r.cell) AS cell,
            COALESCE(b.n, 0) AS base_n,
            COALESCE(r.n, 0) AS recent_n,
@@ -2497,40 +2513,7 @@ def _drift_decisions(funnel: DataFrame, num: int, den: int) -> DataFrame:
 #: prefix of the movement matrix (_RAS_SQL) and the reindex report
 #: (_RIX_SQL); a2 rn2=1 is the per-vector (cell_from, cell_to) move.
 #: Ties → lower cell id, the _argmin_cell_sql contract.
-_RAS_PREFIX = """
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS r,
-             COUNT(*) OVER () AS n
-      FROM embeddings
-    ),
-    b AS (
-      SELECT vec_id, e,
-             CAST(r // CAST(CEIL(n / {files}.0) AS BIGINT) AS INT) AS batch_id
-      FROM base
-    ),
-    m AS (SELECT cluster, mean FROM read_parquet('{means}/*.parquet')),
-    d AS (
-      SELECT b.batch_id, b.vec_id, m.cluster,
-             CAST(FLOOR(SQRT(list_reduce(list_transform(generate_series(1, 64),
-                  i -> (b.e[i] - m.mean[i]) * (b.e[i] - m.mean[i])),
-                  (x, y) -> x + y)) * 1e6 + 0.5) AS BIGINT) AS du
-      FROM b CROSS JOIN m
-    ),
-    a AS (
-      SELECT batch_id, vec_id, cluster, du,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY du, cluster) AS rn
-      FROM d
-    ),
-    funnel AS (
-      SELECT batch_id, cluster AS cell, COUNT(*) AS n, SUM(du) AS sdu
-      FROM a WHERE rn = 1 GROUP BY 1, 2
-    ),
-    base0 AS (SELECT cell, n, sdu FROM funnel WHERE batch_id = 0),
-    rec AS (
-      SELECT cell, n, sdu FROM funnel
-      WHERE batch_id = (SELECT MAX(batch_id) FROM funnel)
-    ),
+_RAS_PREFIX = _AI_DRIFT_CTES + """,
     decs AS (
       SELECT COALESCE(bb.cell, r.cell) AS cell,
              CASE WHEN COALESCE(r.n, 0) = 0 THEN false
@@ -2830,40 +2813,7 @@ _RA_NUM, _RA_DEN = 100, 100
 #: vectors (one seeded Lloyd step — order-free on both engines), and
 #: the post-retrain mean distance recomputed against the re-fit
 #: centroid with the same micro-rounding.
-_RAP_SQL = """
-    WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS r,
-             COUNT(*) OVER () AS n
-      FROM embeddings
-    ),
-    b AS (
-      SELECT vec_id, e,
-             CAST(r // CAST(CEIL(n / {files}.0) AS BIGINT) AS INT) AS batch_id
-      FROM base
-    ),
-    m AS (SELECT cluster, mean FROM read_parquet('{means}/*.parquet')),
-    d AS (
-      SELECT b.batch_id, b.vec_id, m.cluster,
-             CAST(FLOOR(SQRT(list_reduce(list_transform(generate_series(1, 64),
-                  i -> (b.e[i] - m.mean[i]) * (b.e[i] - m.mean[i])),
-                  (x, y) -> x + y)) * 1e6 + 0.5) AS BIGINT) AS du
-      FROM b CROSS JOIN m
-    ),
-    a AS (
-      SELECT batch_id, vec_id, cluster, du,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY du, cluster) AS rn
-      FROM d
-    ),
-    funnel AS (
-      SELECT batch_id, cluster AS cell, COUNT(*) AS n, SUM(du) AS sdu
-      FROM a WHERE rn = 1 GROUP BY 1, 2
-    ),
-    base0 AS (SELECT cell, n, sdu FROM funnel WHERE batch_id = 0),
-    rec AS (
-      SELECT cell, n, sdu FROM funnel
-      WHERE batch_id = (SELECT MAX(batch_id) FROM funnel)
-    ),
+_RAP_SQL = _AI_DRIFT_CTES + """,
     decs AS (
       SELECT COALESCE(bb.cell, r.cell) AS cell,
              CASE WHEN COALESCE(r.n, 0) = 0 THEN false
@@ -2991,18 +2941,24 @@ def pipeline_ann_retrain_apply(spark: SparkSession, sf: str) -> DataFrame:
         from engine.session import parallelize_scan, scan_units
 
         # conditional fan-out (r14): the single-row-group local scan
-        # pinned this checkpoint — and the re-fit explode + distance
-        # aggregates that read it — to ONE task (guide §2.5); no-op at
-        # cluster scale. Downstream consumers are exact integer sums,
-        # so partitioning cannot move a coordinate.
-        asgf = parallelize_scan(
-            emb.select(
+        # pinned the K-distance argmin — and the re-fit explode +
+        # distance aggregates downstream — to ONE task (guide §2.5), so
+        # the BARE scan is spread and the argmin runs after the
+        # repartition. The flagged-cell filter sits after the
+        # checkpoint: above it, Catalyst pushes the filter (and so the
+        # argmin) below the repartition, back into the scan task.
+        # No-op at cluster scale. Downstream consumers are exact integer
+        # sums, so partitioning cannot move a coordinate.
+        asgf = (
+            parallelize_scan(emb, scan_units(sf, "embeddings"))
+            .select(
                 "vec_id",
                 "embedding",
                 F.expr(argmin_sql)["cell"].alias("cell"),
-            ).filter(_sql_in("cell", flagged)),
-            scan_units(sf, "embeddings"),
-        ).localCheckpoint()
+            )
+            .localCheckpoint()
+            .filter(_sql_in("cell", flagged))
+        )
         sums = asgf.select(
             "cell", F.posexplode("embedding").alias("i", "v")
         ).groupBy("cell", "i").agg(
@@ -3404,29 +3360,11 @@ def stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
              row["kept"])
         )
 
-    # same scale-adaptive batch parallelism derivation as the cascade
-    # core (rows/batch ÷ 2k target, clamped [4, 16]) — a stateless gate
-    # batch at contract SFs is a few thousand rows and fixed 16
-    # partitions were task-launch overhead
-    from engine.session import table_rows
-
-    nrows = table_rows(sf, "documents") or 0
-    per_batch = -(-nrows // _DC_FILES) if nrows else 4096
-    parts = max(4, min(16, per_batch // 2048))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .writeStream.foreachBatch(gate)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_stream(
+        _slice_stream(spark, "doc_id long, text string", path),
+        _foreach_batch(gate),
+        shards=_dc_batch_parts(sf),
+    )
     return _tiny_df(
         spark,
         funnel,

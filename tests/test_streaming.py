@@ -445,19 +445,115 @@ def test_stream_dedup_cascade_matches_sequential_semantics(spark):
     assert sum(r[2] + r[3] for r in got) > 0
 
 
-def test_tws_restores_state_store_provider(spark):
-    """Regression pin for the r10 provider leak: stream_stateful_tws
-    needs the RocksDB state-store provider, but the conf is session-
-    wide — it must be restored after the query completes, or every
-    streaming key that runs later in the session silently switches
-    state-store implementations."""
-    from engine.registry import all_queries
+@pytest.mark.parametrize("outcome", ["ok", "raises"])
+@pytest.mark.parametrize("prior", ["set", "unset"])
+def test_run_stream_restores_confs(spark, tmp_path, prior, outcome):
+    """Every streaming query the engine starts goes through _run_stream,
+    which sets the shard count, the per-site confs and the FileSystem-
+    API checkpoint manager for the query's start. Inside the query's
+    batches those values must be in effect; afterwards each conf must
+    be back to its previous value — or unset again if it was unset —
+    whether the query finished or raised (the r10 provider leak:
+    stream_stateful_tws's RocksDB provider reached every later
+    streaming key of the session)."""
+    import pandas as pd
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(key, None)
-    all_queries()["stream_stateful_tws"](spark, SF_SMOKE).collect()
-    after = spark.conf.get(key, None)
-    assert after == before, f"provider leaked: {before!r} -> {after!r}"
+    import engine.streaming as S
+
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    take = "spark.sql.limit.initialNumPartitions"
+    parts = "spark.sql.shuffle.partitions"
+    prev_values = {
+        parts: "5",
+        take: "2",
+        provider: "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider",
+        S._CKPT_MANAGER_KEY: "org.apache.spark.sql.execution.streaming."
+        "checkpointing.FileContextBasedCheckpointFileManager",
+    }
+    run_confs = {
+        provider: "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+        take: "1024",
+    }
+    expected_in_batch = {
+        **run_confs, parts: "3", S._CKPT_MANAGER_KEY: S._FS_CKPT_MANAGER
+    }
+    pd.DataFrame({"x": [1, 2, 3]}).to_parquet(tmp_path / "s.parquet")
+    seen: dict[str, str | None] = {}
+
+    def batch(batch_df, epoch_id):
+        conf = batch_df.sparkSession.conf
+        seen.update({k: conf.get(k, None) for k in expected_in_batch})
+        if outcome == "raises":
+            raise ValueError("injected batch failure")
+
+    session = {k: spark.conf.get(k, None) for k in prev_values}
+    try:
+        for k, v in prev_values.items():
+            if prior == "set":
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
+        before = {k: spark.conf.get(k, None) for k in prev_values}
+        stream = spark.readStream.schema("x long").parquet(str(tmp_path))
+        if outcome == "raises":
+            with pytest.raises(Exception, match="injected batch failure"):
+                S._run_stream(
+                    stream, S._foreach_batch(batch), shards=3,
+                    confs=run_confs,
+                )
+        else:
+            S._run_stream(
+                stream, S._foreach_batch(batch), shards=3, confs=run_confs
+            )
+        after = {k: spark.conf.get(k, None) for k in prev_values}
+    finally:
+        for k, v in session.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert before == (
+        prev_values if prior == "set" else dict.fromkeys(prev_values)
+    )
+    assert after == before
+    assert seen == expected_in_batch
+
+
+def test_fs_manager_only_for_local_checkpoint_roots():
+    """The checkpoint-manager choice is a pure function of the root:
+    unset (Spark's private temp dir) or a local path → the FileSystem-
+    API manager; any other filesystem keeps Spark's default."""
+    from engine.streaming import _fs_manager_safe
+
+    for root in (None, "/tmp/ckpt", "rel/ckpt", "file:///tmp/ckpt"):
+        assert _fs_manager_safe(root), root
+    for root in (
+        "s3a://bucket/ckpt", "gs://bucket/ckpt", "hdfs://nn:8020/ckpt",
+        "abfss://c@acct.dfs.core.windows.net/ckpt",
+    ):
+        assert not _fs_manager_safe(root), root
+
+
+def test_memory_sink_tables_do_not_accumulate(spark):
+    """_run_to_memory drops its stream_mem_N view once it holds the
+    DataFrame, so repeated runs of a memory-sink key leave the session's
+    table list flat while the returned result stays usable."""
+
+    def mem_tables() -> int:
+        return sum(
+            1 for r in spark.sql("SHOW TABLES").collect()
+            if r.tableName.startswith("stream_mem_")
+        )
+
+    start = mem_tables()
+    runs = [
+        QUERIES["stream_dedup_watermark"](spark, SF_SMOKE).collect()
+        for _ in range(2)
+    ]
+    assert mem_tables() <= start
+    assert runs[0] == runs[1] and sum(r["cnt"] for r in runs[0]) > 0
 
 
 def test_stream_ann_ingest_assignment_rule_and_store_layout(spark):

@@ -622,9 +622,15 @@ def test_log_bins_planted_boundaries(spark, tmp_path):
 
 def test_csv_gzip_writes_gz_files(spark):
     import glob
+    import os
+    import shutil
 
+    from engine.session import scratch_dir
+
+    out = scratch_dir("csv_gzip")
+    shutil.rmtree(out)  # only files this run writes may satisfy the glob
     QUERIES["scan_csv_gzip"](spark, SF_SMOKE).collect()
-    assert glob.glob("/root/repo/.scratch/csv_gzip/*.csv.gz")
+    assert glob.glob(os.path.join(out, "*.csv.gz"))
 
 
 def test_attribution_planted_lookback(spark, tmp_path):
