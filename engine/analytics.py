@@ -26,7 +26,7 @@ from pyspark.sql import Column
 
 from engine.canon import dround
 from engine.registry import register
-from engine.session import EVENTS_US_SQL, T, tiny_df
+from engine.session import EVENTS_US_SQL, T, oracle_sf, sf_tag, tiny_df
 
 
 def _exact_sum2(expr: Column, scale: int = 10_000) -> Column:
@@ -1030,34 +1030,25 @@ def ts_interpolate_linear(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-_AFFINITY_MEMO: set = set()
-
-
 def _affinity_path(sf: str) -> str:
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact_path
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    return scratch_dir("affinity") + (
-        f"/edges_{tag}_{data_fingerprint(sf, 'events')}"
-    )
+    return artifact_path("affinity", sf, ("events",), "edges")
 
 
 def materialize_affinity_edges(spark: SparkSession, sf: str) -> DataFrame:
-    """The affinity edge list, materialized ONCE per (sf, events
-    fingerprint) and served from parquet to its seven graph-key
-    consumers — a 100 TB graph pipeline derives its edge list once and
-    never recomputes it per query (the kmeans-assignments contract:
-    fingerprinted path, _SUCCESS-gated, in-process memo). Oracles are
-    untouched — they rebuild the same edges in SQL from events, so the
+    """The affinity edge list, built once per input
+    (:func:`engine.session.artifact`) and served from parquet to its
+    seven graph-key consumers — a 100 TB graph pipeline derives its edge
+    list once and never recomputes it per query. Oracles are untouched —
+    they rebuild the same edges in SQL from events, so the
     materialization stays value-checked on every consumer key."""
-    import os
+    from engine.session import artifact
 
-    path = _affinity_path(sf)
-    key = ("affinity", path)
-    if not (key in _AFFINITY_MEMO and os.path.exists(path + "/_SUCCESS")):
-        affinity_edges(spark, sf).write.mode("overwrite").parquet(path)
-        _AFFINITY_MEMO.add(key)
-    return spark.read.parquet(path)
+    def build(tmp: str) -> None:
+        affinity_edges(spark, sf).write.mode("overwrite").parquet(tmp)
+
+    return spark.read.parquet(artifact(_affinity_path(sf), build))
 
 
 def affinity_edge_parts(spark: SparkSession, sf: str) -> int:
@@ -1129,7 +1120,7 @@ def _pagerank_ranks9_path(sf: str) -> str:
     silently compared (ADVICE r3; same contract as the IVF corpus memo)."""
     from engine.session import data_fingerprint, scratch_dir
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+    tag = sf_tag(sf)
     return scratch_dir("pagerank") + (
         f"/ranks9_{tag}_{data_fingerprint(sf, 'events')}"
     )
@@ -1792,20 +1783,12 @@ def scan_wholetext_docs(spark: SparkSession, sf: str) -> DataFrame:
     metadata doesn't exist. The oracle checks content length per doc
     against the source table, proving byte-faithful round trip. The
     fixture (one file per doc) is a test-harness builder like the
-    streaming replay, fingerprinted against testdata regeneration."""
+    streaming replay, built once per input (engine.session.artifact)."""
     import os
 
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact, artifact_path
 
-    tag = (
-        sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-        + "_"
-        + data_fingerprint(sf, "documents")
-    )
-    out = scratch_dir("wholetext") + f"/{tag}"
-    marker = os.path.join(out, "_READY")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
+    def build(tmp: str) -> None:
         rows = (
             T(spark, sf, "documents")
             .filter(F.col("doc_id") % 5 == 0)
@@ -1813,9 +1796,10 @@ def scan_wholetext_docs(spark: SparkSession, sf: str) -> DataFrame:
             .collect()  # fixture builder (bounded: 1 in 5 docs), not an operator
         )
         for r in rows:
-            with open(os.path.join(out, f"doc_{r['doc_id']}_{r['lang']}.txt"), "w") as f:
+            with open(os.path.join(tmp, f"doc_{r['doc_id']}_{r['lang']}.txt"), "w") as f:
                 f.write(r["text"])
-        open(marker, "w").close()
+
+    out = artifact(artifact_path("wholetext", sf, ("documents",)), build)
     files = (
         spark.read.option("wholetext", True)
         .text(out, pathGlobFilter="*.txt")
@@ -2306,7 +2290,10 @@ def agg_count_distinct_multi(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_CSV_MALFORMED_SQL = None  # set below after the fixture-path helper
+def _malformed_csv_path(sf: str) -> str:
+    from engine.session import artifact_path
+
+    return artifact_path("csv_malformed", sf, ("orders",))
 
 
 def _malformed_csv_dir(spark: SparkSession, sf: str) -> str:
@@ -2314,43 +2301,22 @@ def _malformed_csv_dir(spark: SparkSession, sf: str) -> str:
     a number (field count intact — the parser must flag, not skip)."""
     import os
 
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact
 
-    tag = (
-        sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-        + "_"
-        + data_fingerprint(sf, "orders")
-    )
-    out = scratch_dir("csv_malformed") + f"/{tag}"
-    marker = os.path.join(out, "_READY")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
+    def build(tmp: str) -> None:
         rows = (
             T(spark, sf, "orders")
             .filter(F.col("o_orderkey") % 20 == 0)
             .select("o_orderkey", "o_orderstatus", "o_totalprice")
             .collect()  # fixture builder (1 in 20 orders), not an operator
         )
-        with open(os.path.join(out, "part-000.csv"), "w") as f:
+        with open(os.path.join(tmp, "part-000.csv"), "w") as f:
             for r in rows:
                 f.write(f"{r['o_orderkey']},{r['o_orderstatus']},{r['o_totalprice']}\n")
             for i in range(10):
                 f.write(f"{900000000 + i},X,not_a_number_{i}\n")
-        open(marker, "w").close()
-    return out
 
-
-def _malformed_csv_path_sf001() -> str:
-    """Oracle path for the driver's correctness scale (sf0.01),
-    fingerprinted on the orders table — resolved LAZILY at
-    all_oracles() call time (via the _csv_malformed_sql builder), NOT
-    at module import: an import-time string would go stale if testdata
-    regenerates inside a long-lived process (the r7 ADVICE class). The
-    Spark query writes the fixture before the oracle reads it."""
-    from engine.session import data_fingerprint, scratch_dir
-
-    tag = "sf0_01_" + data_fingerprint("/root/testdata/sf0.01", "orders")
-    return scratch_dir("csv_malformed") + f"/{tag}"
+    return artifact(_malformed_csv_path(sf), build)
 
 
 def _csv_malformed_sql() -> str:
@@ -2358,7 +2324,7 @@ def _csv_malformed_sql() -> str:
     # resolved when the driver runs, not at module import (ADVICE r7)
     return f"""
     WITH raw AS (
-      SELECT * FROM read_csv('{_malformed_csv_path_sf001()}/part-000.csv',
+      SELECT * FROM read_csv('{_malformed_csv_path(oracle_sf())}/part-000.csv',
                              header = false, all_varchar = true,
                              columns = {{'k': 'VARCHAR', 's': 'VARCHAR',
                                          'p': 'VARCHAR'}})
@@ -2527,7 +2493,7 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     from engine.session import data_fingerprint, scratch_dir
 
     tag = (
-        sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+        sf_tag(sf)
         + "_"
         + data_fingerprint(sf, "events")
     )

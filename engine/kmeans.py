@@ -25,7 +25,15 @@ from pyspark.sql import functions as F
 
 from engine.canon import dround
 from engine.registry import register
-from engine.session import T, data_fingerprint, scratch_cache, scratch_dir, tiny_df
+from engine.session import (
+    T,
+    artifact,
+    artifact_path,
+    data_fingerprint,
+    oracle_sf,
+    scratch_cache,
+    tiny_df,
+)
 
 K = 10
 ETA = 20.0  # StackOverflow.scala `kmeansEta` [H]
@@ -116,24 +124,12 @@ def run_kmeans(
     return _assign(emb, means).select("vec_id", "label", "cluster"), means, it
 
 
-def _sf_tag(sf: str) -> str:
-    return sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-
-
-def _assign_path(sf_tag: str) -> str:
-    """Per-scale-factor assignment materialization (ADVICE r1: a shared
-    path would let an sf0.1 bench run clobber the sf0.01 assignments the
-    oracle reads). The oracle contract runs at sf0.01, so the oracle SQL
-    pins that tag; the Spark query must run before the oracle in the
-    same filesystem (it writes the parquet the oracle reads)."""
-    return scratch_dir("kmeans") + f"/assignments_{sf_tag}"
-
-
-#: per-process memo of completed model materializations. Keyed by the
-#: source-data FINGERPRINT (not just sf — a bare _SUCCESS check served
-#: stale indexes after testdata regeneration, ADVICE r2), so a regen in
-#: a fresh process rewrites; within one process the write happens once.
-_MATERIALIZED: set[tuple[str, str, str]] = set()
+def _assign_path(sf: str) -> str:
+    """Per-scale-factor assignment artifact (:func:`engine.session.
+    artifact_path`): oracles resolve it for :func:`oracle_sf`, and the
+    Spark query must run before the oracle in the same filesystem (it
+    writes the parquet the oracle reads)."""
+    return artifact_path("kmeans", sf, ("embeddings",), "assignments")
 
 
 def materialize_assignments(spark: SparkSession, sf: str) -> str:
@@ -144,21 +140,20 @@ def materialize_assignments(spark: SparkSession, sf: str) -> str:
     even though the iterative fit itself is rows-only. The constant
     `iterations` column persists the convergence metadata with the
     model output (the standard model-card practice), which is what lets
-    `so_kmeans` expose it under a full oracle."""
-    import os
+    `so_kmeans` expose it under a full oracle. Built once per input
+    (:func:`engine.session.artifact`)."""
 
-    path = _assign_path(_sf_tag(sf))
-    key = ("assign", sf, data_fingerprint(sf, "embeddings"))
-    if key in _MATERIALIZED and os.path.exists(path + "/_SUCCESS"):
-        return path
-    assigned, _means, it = run_kmeans(spark, sf)
-    assigned.withColumn("iterations", F.lit(it)).write.mode("overwrite").parquet(path)
-    _MATERIALIZED.add(key)
-    return path
+    def build(tmp: str) -> None:
+        assigned, _means, it = run_kmeans(spark, sf)
+        assigned.withColumn("iterations", F.lit(it)).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+
+    return artifact(_assign_path(sf), build)
 
 
-def _means_path(sf_tag: str) -> str:
-    return scratch_dir("kmeans") + f"/means_{sf_tag}"
+def _means_path(sf: str) -> str:
+    return artifact_path("kmeans", sf, ("embeddings",), "means")
 
 
 def materialize_means(spark: SparkSession, sf: str) -> tuple[str, list[list[float]]]:
@@ -166,38 +161,37 @@ def materialize_means(spark: SparkSession, sf: str) -> tuple[str, list[list[floa
     model itself, alongside the assignments. An IVF probe needs the
     centroid list to pick cells; materializing it lets the oracle run
     the identical probe in SQL (read means → rank cells per query →
-    scan probed cells), value-checking the whole ANN path."""
-    import os
+    scan probed cells), value-checking the whole ANN path. The means
+    come from the fit cache when it holds them, else from the K rows of
+    the published artifact (parquet round-trips doubles exactly)."""
 
-    path = _means_path(_sf_tag(sf))
-    fp = data_fingerprint(sf, "embeddings")
-    key = ("means", sf, fp)
-    # memo check BEFORE invoking run_kmeans (the materialize_assignments
-    # pattern — ADVICE r3): the fitted means live in _MEANS_CACHE keyed
-    # by the same fingerprint, so a memo hit returns them by value
-    # without even constructing the assign plan.
-    if key in _MATERIALIZED and os.path.exists(path + "/_SUCCESS") and (
-        (sf, fp) in _MEANS_CACHE
-    ):
-        return path, _MEANS_CACHE[(sf, fp)][0]
-    _assigned, means, _it = run_kmeans(spark, sf)
-    tiny_df(
-        spark, [(i, m) for i, m in enumerate(means)], "cluster int, mean array<double>"
-    ).write.mode("overwrite").parquet(path)
-    _MATERIALIZED.add(key)
-    return path, means
+    def build(tmp: str) -> None:
+        _assigned, means, _it = run_kmeans(spark, sf)
+        tiny_df(
+            spark,
+            [(i, m) for i, m in enumerate(means)],
+            "cluster int, mean array<double>",
+        ).write.mode("overwrite").parquet(tmp)
+
+    path = artifact(_means_path(sf), build)
+    memo = (sf, data_fingerprint(sf, "embeddings"))
+    if memo in _MEANS_CACHE:
+        return path, _MEANS_CACHE[memo][0]
+    rows = spark.read.parquet(path).collect()  # K rows — the model
+    return path, [list(r["mean"]) for r in sorted(rows, key=lambda r: r["cluster"])]
 
 
-@register(
-    "so_kmeans",
-    sql=f"""
+def _so_kmeans_sql() -> str:
+    return f"""
     SELECT cluster, COUNT(*) AS size,
            COUNT(DISTINCT label) AS n_labels,
            MAX(iterations) AS iterations
-    FROM read_parquet('{_assign_path("sf0_01")}/*.parquet')
+    FROM read_parquet('{_assign_path(oracle_sf())}/*.parquet')
     GROUP BY cluster ORDER BY cluster
-    """,
-)
+    """
+
+
+@register("so_kmeans", sql=_so_kmeans_sql)
 def so_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster summary after convergence: size per cluster plus the
     iteration count (constant column — observability of convergence).
@@ -220,10 +214,9 @@ def so_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "so_cluster_stats",
-    sql=f"""
-    WITH a AS (SELECT * FROM read_parquet('{_assign_path("sf0_01")}/*.parquet')),
+def _so_cluster_stats_sql() -> str:
+    return f"""
+    WITH a AS (SELECT * FROM read_parquet('{_assign_path(oracle_sf())}/*.parquet')),
     sizes AS (
       SELECT cluster, COUNT(*) AS size,
              ROUND(MEDIAN(vec_id) * 100) / 100 AS med_vec
@@ -239,8 +232,10 @@ def so_kmeans(spark: SparkSession, sf: str) -> DataFrame:
            ROUND(100.0 * d.cnt / s.size * 10) / 10 AS dom_pct,
            s.size, s.med_vec
     FROM sizes s JOIN dom d ON s.cluster = d.cluster AND d.rn = 1
-    """,
-)
+    """
+
+
+@register("so_cluster_stats", sql=_so_cluster_stats_sql)
 def so_cluster_stats(spark: SparkSession, sf: str) -> DataFrame:
     """`clusterResults` [H]: per final cluster — dominant label (mode,
     deterministic tie-break), dominant %, size, exact median (computed
@@ -269,8 +264,8 @@ def so_cluster_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ml_assign_path(sf_tag: str) -> str:
-    return scratch_dir("kmeans") + f"/ml_assignments_{sf_tag}"
+def _ml_assign_path(sf: str) -> str:
+    return artifact_path("kmeans", sf, ("embeddings",), "ml_assignments")
 
 
 def materialize_ml_assignments(spark: SparkSession, sf: str) -> str:
@@ -281,40 +276,35 @@ def materialize_ml_assignments(spark: SparkSession, sf: str) -> str:
     rows-only by nature (library RNG, no SQL twin), but its RESULT is a
     relation both engines share, so every downstream aggregate gets a
     full value oracle exactly like `so_kmeans`."""
-    import os
-
     from pyspark.ml.clustering import KMeans as MLKMeans
     from pyspark.ml.functions import array_to_vector
 
-    path = _ml_assign_path(_sf_tag(sf))
-    key = ("ml_assign", sf, data_fingerprint(sf, "embeddings"))
-    if key in _MATERIALIZED and os.path.exists(path + "/_SUCCESS"):
-        return path
-    emb = T(spark, sf, "embeddings").select(
-        "vec_id",
-        "label",
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
-    )
-    model = MLKMeans(k=K, seed=42, maxIter=MAX_ITER, tol=1e-4).fit(emb)
-    (
-        model.transform(emb)
-        .select("vec_id", "label", F.col("prediction").cast("int").alias("cluster"))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _MATERIALIZED.add(key)
-    return path
+    def build(tmp: str) -> None:
+        emb = T(spark, sf, "embeddings").select(
+            "vec_id",
+            "label",
+            array_to_vector(F.col("embedding").cast("array<double>")).alias(
+                "features"
+            ),
+        )
+        model = MLKMeans(k=K, seed=42, maxIter=MAX_ITER, tol=1e-4).fit(emb)
+        model.transform(emb).select(
+            "vec_id", "label", F.col("prediction").cast("int").alias("cluster")
+        ).write.mode("overwrite").parquet(tmp)
+
+    return artifact(_ml_assign_path(sf), build)
 
 
-@register(
-    "so_kmeans_ml",
-    sql=f"""
+def _so_kmeans_ml_sql() -> str:
+    return f"""
     SELECT cluster, COUNT(*) AS size,
            COUNT(DISTINCT label) AS n_labels
-    FROM read_parquet('{_ml_assign_path("sf0_01")}/*.parquet')
+    FROM read_parquet('{_ml_assign_path(oracle_sf())}/*.parquet')
     GROUP BY cluster ORDER BY cluster
-    """,
-)
+    """
+
+
+@register("so_kmeans_ml", sql=_so_kmeans_ml_sql)
 def so_kmeans_ml(spark: SparkSession, sf: str) -> DataFrame:
     """The library counterpart of so_kmeans (SURVEY.md §2 A18: both the
     semantics-faithful manual loop AND pyspark.ml.clustering.KMeans):

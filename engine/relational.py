@@ -45,7 +45,16 @@ from engine.canon import (
     portable_try_int_sql,
 )
 from engine.registry import register
-from engine.session import EVENTS_US_SQL, T, data_fingerprint, scratch_dir, tiny_df
+from engine.session import (
+    EVENTS_US_SQL,
+    T,
+    artifact,
+    artifact_path,
+    data_fingerprint,
+    scratch_dir,
+    sf_tag,
+    tiny_df,
+)
 
 # --------------------------------------------------------------------------
 # Scans / sources / sinks
@@ -1468,12 +1477,8 @@ def join_bucketed_colocated(spark: SparkSession, sf: str) -> DataFrame:
 
     out = scratch_dir("bucketed")
     # fingerprinted name+path: regenerated testdata can't hit stale buckets
-    sf_tag = (
-        sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-        + "_"
-        + data_fingerprint(sf, "lineitem")
-    )
-    o_name, l_name = f"orders_b_{sf_tag}", f"lineitem_b_{sf_tag}"
+    tag = sf_tag(sf) + "_" + data_fingerprint(sf, "lineitem")
+    o_name, l_name = f"orders_b_{tag}", f"lineitem_b_{tag}"
     for name, table, key in (
         (o_name, "orders", "o_orderkey"),
         (l_name, "lineitem", "l_orderkey"),
@@ -2259,7 +2264,7 @@ def scan_parquet_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     appear over time; re-writing history is not an option). mergeSchema
     costs a footer read per file — at scale you'd pin the merged schema
     in a catalog instead, which is why it's off by default."""
-    out = scratch_dir("schema_evolution") + "/" + sf.rstrip("/").rsplit("/", 1)[-1]
+    out = scratch_dir("schema_evolution") + "/" + sf_tag(sf)
     o = T(spark, sf, "orders")
     old = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     new = o.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -2427,28 +2432,19 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf: str) -> DataFrame:
     At 100 TB this is the difference between scanning one date/region
     partition and scanning the lake. Plan shape pinned in
     tests/test_plans.py (dynamicpruningexpression present)."""
-    # memo path includes a source-data fingerprint: _SUCCESS alone would
-    # silently serve a stale partitioned copy after testdata regeneration
-    tag = (
-        sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-        + "_"
-        + data_fingerprint(sf, "lineitem")
-    )
-    out = scratch_dir("dpp") + f"/lineitem_{tag}"
-    dim_path = scratch_dir("dpp") + f"/dim_{tag}"
-    import os
 
-    if not os.path.exists(out + "/_SUCCESS"):
+    def build(tmp: str) -> None:
         T(spark, sf, "lineitem").write.mode("overwrite").partitionBy(
             "l_returnflag"
-        ).parquet(out)
-    if not os.path.exists(dim_path + "/_SUCCESS"):
+        ).parquet(tmp + "/fact")
         tiny_df(
             spark, [("R", "keep"), ("A", "drop"), ("N", "drop")], "flag string, label string"
-        ).write.mode("overwrite").parquet(dim_path)
-    fact = spark.read.parquet(out)
+        ).write.mode("overwrite").parquet(tmp + "/dim")
+
+    out = artifact(artifact_path("dpp", sf, ("lineitem",), "lineitem"), build)
+    fact = spark.read.parquet(out + "/fact")
     dim = F.broadcast(
-        spark.read.parquet(dim_path).filter(F.col("label") == "keep")
+        spark.read.parquet(out + "/dim").filter(F.col("label") == "keep")
     )
     return (
         fact.join(dim, fact.l_returnflag == dim.flag)

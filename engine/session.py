@@ -293,8 +293,8 @@ def parallelize_scan(df: DataFrame, units: int | None = None) -> DataFrame:
 
 
 def scratch_dir(subdir: str) -> str:
-    """Writable scratch area for sink/roundtrip queries (kept inside the
-    repo tree; gitignored)."""
+    """Writable scratch area for sink/roundtrip queries and for
+    :func:`artifact` (kept inside the repo tree; gitignored)."""
     import pathlib
 
     p = pathlib.Path(__file__).resolve().parent.parent / ".scratch" / subdir
@@ -341,11 +341,79 @@ def drain_scratch_caches() -> None:
             pass  # session already stopped — nothing to free
 
 
+def sf_tag(sf: str) -> str:
+    """Filesystem-safe name of a scale-factor directory
+    (``/data/sf0.01/`` → ``sf0_01``) — the prefix of every scratch
+    artifact and run-state directory."""
+    return os.path.basename(sf.rstrip("/")).replace(".", "_")
+
+
+def artifact_path(kind: str, sf: str, tables: tuple, *parts) -> str:
+    """Where the scratch artifact of ``kind`` built from ``tables`` of
+    ``sf`` lives: ``.scratch/<kind>/<sf_tag>_<parts>_<fingerprint>_<hash
+    mode>``. The name carries every input — the source fingerprint
+    (:func:`data_fingerprint`), the hash family (:func:`fast_hash`) and
+    the caller's ``parts`` (algorithm version, sizes, slice counts) — so
+    a path that exists can only hold an artifact of exactly these
+    inputs. Creates ``.scratch/<kind>`` but never the leaf: oracles call
+    this to name an artifact without building it."""
+    fp = "-".join(data_fingerprint(sf, t) for t in tables)
+    mode = "xx" if fast_hash() else "md5"
+    name = "_".join(str(p) for p in (sf_tag(sf), *parts, fp, mode) if p != "")
+    return os.path.join(scratch_dir(kind), name)
+
+
+#: marker file inside a published artifact; its content is the ident
+ARTIFACT_MARKER = "_ARTIFACT"
+
+
+def artifact(path: str, build, ident: str = "") -> str:
+    """Build-once scratch artifact at ``path`` (name it with
+    :func:`artifact_path`); returns ``path``.
+
+    Fresh means ``path/_ARTIFACT`` exists and holds ``ident`` (inputs
+    the path cannot carry, e.g. a derived generation's cell list), so a
+    fresh artifact is reused by every process. Otherwise ``build(tmp)``
+    fills the process-private directory ``<path>.tmp.<pid>``, the marker
+    is written inside it, the stale ``path`` is removed and ONE
+    ``os.rename`` publishes: a reader sees a complete artifact or none.
+    A build that raises publishes nothing and its temp directory is
+    removed; a leftover temp directory of another process is never
+    adopted; when another process publishes first, this one discards its
+    temp."""
+    import shutil
+
+    def fresh() -> bool:
+        try:
+            with open(os.path.join(path, ARTIFACT_MARKER)) as fh:
+                return fh.read() == ident
+        except OSError:
+            return False
+
+    if fresh():
+        return path
+    tmp = f"{path}.tmp.{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, ARTIFACT_MARKER), "w") as fh:
+            fh.write(ident)
+        if not fresh():
+            shutil.rmtree(path, ignore_errors=True)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                pass  # another process published first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
+
+
 def data_fingerprint(sf_dir: str, table: str) -> str:
-    """mtime+size fingerprint of a source parquet. Memoized scratch
-    artifacts (IVF corpus, DPP partitioned fact) embed it in their path
-    so regenerated testdata or a changed upstream can never be served a
-    stale index (_SUCCESS-only memoization reused blindly — ADVICE r2)."""
+    """mtime+size fingerprint of a source parquet, carried in every
+    :func:`artifact_path` so regenerated testdata or a changed upstream
+    can never be served a stale artifact."""
     import hashlib
     import pathlib
 

@@ -20,7 +20,15 @@ from pyspark.sql import functions as F
 
 from engine.canon import dround, joined
 from engine.registry import register
-from engine.session import T, data_fingerprint, scratch_cache, tiny_df
+from engine.session import (
+    T,
+    artifact,
+    artifact_path,
+    oracle_sf,
+    scratch_cache,
+    sf_tag,
+    tiny_df,
+)
 
 # --------------------------------------------------------------------------
 # Deduplication
@@ -352,32 +360,23 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     return materialize_jaccard_pairs(spark, sf)
 
 
-_JACCARD_MEMO: set = set()
-
-
 def materialize_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact Jaccard pair evidence, materialized once per (sf, documents
-    fingerprint) — the affinity-edges contract applied to the dedup
-    family: pair evidence is a derived relation two keys consume, and a
-    100 TB pipeline computes it once, persists it, and feeds every
-    downstream decision from the same parquet. Oracles rebuild the
-    pairs in SQL, so the materialization stays value-checked."""
-    import os
+    """Exact Jaccard pair evidence, built once per input
+    (:func:`engine.session.artifact`): pair evidence is a derived
+    relation two keys consume, and a 100 TB pipeline computes it once,
+    persists it, and feeds every downstream decision from the same
+    parquet. Oracles rebuild the pairs in SQL, so the materialization
+    stays value-checked."""
+    from engine.session import scan_units
 
-    from engine.session import data_fingerprint, scan_units, scratch_dir
-
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = scratch_dir("jaccard") + (
-        f"/pairs_{tag}_{data_fingerprint(sf, 'documents')}"
-    )
-    key = ("jacpairs", path)
-    if not (key in _JACCARD_MEMO and os.path.exists(path + "/_SUCCESS")):
+    def build(tmp: str) -> None:
         jaccard_pairs(
             T(spark, sf, "documents"),
             units=scan_units(sf, "documents"),
             shingled=scratch_cache(materialize_shingle_index(spark, sf)),
-        ).write.mode("overwrite").parquet(path)
-        _JACCARD_MEMO.add(key)
+        ).write.mode("overwrite").parquet(tmp)
+
+    path = artifact(artifact_path("jaccard", sf, ("documents",), "pairs"), build)
     return spark.read.parquet(path)
 
 
@@ -765,7 +764,7 @@ def sim_cosine_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("sub", F.pmod(F.xxhash64("query_id", "tbl"), F.col("s")))
         .select("query_id", "tbl", "hkey", "sub")
     )
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+    tag = sf_tag(sf)
     pairs = (
         qh.join(
             corp.select(
@@ -850,7 +849,7 @@ def _ivf_oracle_sql() -> str:
     from engine.kmeans import _assign_path, _means_path
 
     return _TOPK_IVF_SQL.format(
-        means=_means_path("sf0_01"), assign=_assign_path("sf0_01")
+        means=_means_path(oracle_sf()), assign=_assign_path(oracle_sf())
     )
 
 
@@ -927,16 +926,17 @@ def sim_cosine_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 5)
 
 
-def _kmeans_assign_path_sf001() -> str:
+def _oracle_assign_path() -> str:
     from engine.kmeans import _assign_path
 
-    return _assign_path("sf0_01")
+    return _assign_path(oracle_sf())
 
 
-_EMB_NEARDUP_SQL = f"""
+def _emb_neardup_sql() -> str:
+    return f"""
     WITH asg AS (
       SELECT vec_id, cluster
-      FROM read_parquet('{_kmeans_assign_path_sf001()}/*.parquet')
+      FROM read_parquet('{_oracle_assign_path()}/*.parquet')
     ),
     e AS (
       SELECT e.vec_id, e.label, a.cluster AS cell, e.embedding::DOUBLE[] AS v
@@ -950,7 +950,7 @@ _EMB_NEARDUP_SQL = f"""
 """
 
 
-@register("dedup_embedding", sql=_EMB_NEARDUP_SQL)
+@register("dedup_embedding", sql=_emb_neardup_sql)
 def dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cos ≥ 0.95), candidate-limited to
     same IVF CELL (k-means coarse quantization, the shared materialized
@@ -1342,33 +1342,23 @@ def sim_ann_partitioned_probe(spark: SparkSession, sf: str) -> DataFrame:
     against the same relational IVF-probe oracle (both formulations
     must match the one SQL answer)."""
     import math
-    import os
 
     from engine.kmeans import materialize_assignments, materialize_means
-    from engine.session import scratch_dir
 
     emb = T(spark, sf, "embeddings")
     asg_pq = materialize_assignments(spark, sf)
     _means_pq, means = materialize_means(spark, sf)
-    assigned = spark.read.parquet(asg_pq)
-    # memo path includes a source-data fingerprint: _SUCCESS alone would
-    # silently serve a stale index after testdata regeneration
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out = scratch_dir("ann_index") + (
-        f"/corpus_{tag}_{data_fingerprint(sf, 'embeddings')}"
-    )
-    if not os.path.exists(out + "/_SUCCESS"):
-        (
-            emb.join(assigned.select("vec_id", "cluster"), "vec_id")
-            .select(
-                F.col("vec_id").alias("neighbor_id"),
-                _as_double("embedding").alias("ce"),
-                F.col("cluster").alias("cell"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(out)
-        )
+
+    def build(tmp: str) -> None:
+        emb.join(
+            spark.read.parquet(asg_pq).select("vec_id", "cluster"), "vec_id"
+        ).select(
+            F.col("vec_id").alias("neighbor_id"),
+            _as_double("embedding").alias("ce"),
+            F.col("cluster").alias("cell"),
+        ).write.mode("overwrite").partitionBy("cell").parquet(tmp)
+
+    out = artifact(artifact_path("ann_index", sf, ("embeddings",), "corpus"), build)
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qe")
     )
@@ -1572,10 +1562,12 @@ def dedup_lines_global(spark: SparkSession, sf: str) -> DataFrame:
 #: 1 everywhere, and the pair set (hence the result) is unchanged.
 _KNN_CELL_TARGET = 512
 
-_KNN_GRAPH_SQL = f"""
+
+def _knn_graph_sql() -> str:
+    return f"""
     WITH asg AS (
       SELECT vec_id, cluster
-      FROM read_parquet('{_kmeans_assign_path_sf001()}/*.parquet')
+      FROM read_parquet('{_oracle_assign_path()}/*.parquet')
     ),
     cs AS (
       SELECT cluster, GREATEST(1, CEIL(COUNT(*) / {_KNN_CELL_TARGET}.0))::BIGINT AS s
@@ -1603,7 +1595,7 @@ _KNN_GRAPH_SQL = f"""
 """
 
 
-@register("sim_knn_graph", sql=_KNN_GRAPH_SQL)
+@register("sim_knn_graph", sql=_knn_graph_sql)
 def sim_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-wide k-NN graph (k=3) over the embedding column — the
     substrate for embedding-space clustering, semdedup, and diversity
@@ -1737,10 +1729,10 @@ def _semdedup_oracle_sql() -> str:
     return f"""
     WITH asg AS (
       SELECT vec_id, cluster
-      FROM read_parquet('{_assign_path("sf0_01")}/*.parquet')
+      FROM read_parquet('{_assign_path(oracle_sf())}/*.parquet')
     ),
     m AS (SELECT cluster, mean
-          FROM read_parquet('{_means_path("sf0_01")}/*.parquet')),
+          FROM read_parquet('{_means_path(oracle_sf())}/*.parquet')),
     e AS (
       SELECT a.cluster AS cell, e.vec_id, e.embedding::DOUBLE[] AS v, m.mean
       FROM embeddings e JOIN asg a USING (vec_id)
@@ -1921,36 +1913,20 @@ def pipeline_lsh_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_SHINGLE_MEMO: set = set()
-
-
 def materialize_shingle_index(spark: SparkSession, sf: str) -> DataFrame:
-    """The (doc_id, sh array<string>) 5-shingle relation, materialized
-    once per (sf, documents fingerprint) — the materialize_jaccard_pairs
-    contract one level down: the shingle build (tokenize + 5-gram +
-    array_distinct over every document) is the dominant shared cost of
-    the shingle-family keys (ngram novelty, LSH recall audit), and a
-    100 TB pipeline computes the shingle index once, persists it
-    columnar, and feeds every shingle consumer from the same parquet.
-    Oracles are untouched — they rebuild shingles in SQL from documents,
-    so every consumer stays value-checked."""
-    import os
+    """The (doc_id, sh array<string>) 5-shingle relation, built once per
+    input (:func:`engine.session.artifact`) — the shingle build
+    (tokenize + 5-gram + array_distinct over every document) is the
+    dominant shared cost of the shingle-family keys (ngram novelty, LSH
+    recall audit), and a 100 TB pipeline computes the shingle index
+    once, persists it columnar, and feeds every shingle consumer from
+    the same parquet. Oracles are untouched — they rebuild shingles in
+    SQL from documents, so every consumer stays value-checked."""
 
-    from engine.session import (
-        data_fingerprint,
-        parallelize_scan,
-        scan_units,
-        scratch_dir,
-    )
+    def build(tmp: str) -> None:
+        shingle_build_df(spark, sf).write.mode("overwrite").parquet(tmp)
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = scratch_dir("shingles") + (
-        f"/sh_{tag}_{data_fingerprint(sf, 'documents')}"
-    )
-    key = ("shingles", path)
-    if not (key in _SHINGLE_MEMO and os.path.exists(path + "/_SUCCESS")):
-        shingle_build_df(spark, sf).write.mode("overwrite").parquet(path)
-        _SHINGLE_MEMO.add(key)
+    path = artifact(artifact_path("shingles", sf, ("documents",), "sh"), build)
     return spark.read.parquet(path)
 
 
@@ -2500,7 +2476,7 @@ def _ivf_pq_oracle_sql() -> str:
     from engine.kmeans import _assign_path, _means_path
 
     return _IVF_PQ_SQL.format(
-        means=_means_path("sf0_01"), assign=_assign_path("sf0_01")
+        means=_means_path(oracle_sf()), assign=_assign_path(oracle_sf())
     )
 
 
@@ -2514,25 +2490,15 @@ _PQ_ALGO_V = 2
 
 
 def _pq_artifact_root(sf: str) -> str:
-    """Fingerprint- AND version-addressed IVF-PQ artifact root (r12 +
-    ADVICE r12): the name carries the algorithm version, subspace
-    count, codebook size, and the source-data fingerprint, so a
-    pre-existing root is sufficient proof of freshness across
-    processes — the assignments the codes depend on are themselves
-    deterministic given the same embeddings. (The r11 in-process memo
-    made every NEW process pay the full encode — ~128 s at sf1x with
-    K=256 — even though the artifact on disk was already exactly
-    right.) cmeans and codes live UNDER this one root and are
-    committed together by an atomic directory rename
-    (:func:`materialize_pq_codes`), so a reader can never observe a
-    half-written pair."""
-    from engine.session import scratch_dir
-
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    fp = data_fingerprint(sf, "embeddings")
-    return (
-        scratch_dir("pq_codes")
-        + f"/ivfpqr_v{_PQ_ALGO_V}_s{_PQ_S}_k{_PQ_K_R}_{tag}_{fp}"
+    """IVF-PQ artifact root (:func:`engine.session.artifact_path`): the
+    name carries the algorithm version, subspace count and codebook size
+    next to the source fingerprint and hash mode, so a published root is
+    sufficient proof of freshness across processes — the assignments
+    the codes depend on are themselves deterministic given the same
+    embeddings. cmeans, cb and codes live UNDER this one root and
+    publish together."""
+    return artifact_path(
+        "pq_codes", sf, ("embeddings",), f"ivfpqr_v{_PQ_ALGO_V}_s{_PQ_S}_k{_PQ_K_R}"
     )
 
 
@@ -2557,63 +2523,60 @@ def materialize_pq_codes(spark: SparkSession, sf: str) -> str:
     quantized argmins), so the oracle recomputes the identical relation
     from scratch in SQL rather than reading this artifact.
 
-    ATOMIC COMMIT (ADVICE r12): both relations build under a
-    process-private temp root, then ONE os.rename publishes them —
-    concurrent builders race the rename, the loser discards its temp;
-    a reader can never observe a half-overwritten artifact. The root's
-    existence IS the commit marker."""
-    import os
-    import shutil
-
-    root = _pq_artifact_root(sf)
-    # a complete root carries all three relations; anything else (e.g.
-    # a root written before the layout gained cb/) rebuilds in place —
-    # the rename publish means a half-layout can only come from an
-    # older code version, never a torn write
-    if all(
-        os.path.isdir(os.path.join(root, p)) for p in ("codes", "cmeans", "cb")
-    ):
-        return _pq_codes_path(sf)
-    shutil.rmtree(root, ignore_errors=True)
+    Built once per input (:func:`engine.session.artifact`); the
+    codebook is checked (:func:`_check_codebook`) before anything
+    publishes."""
     from engine.kmeans import materialize_assignments
-
-    tmp = f"{root}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    emb = T(spark, sf, "embeddings")
-    assigned = spark.read.parquet(materialize_assignments(spark, sf)).select(
-        "vec_id", F.col("cluster").alias("cell")
-    )
-    # conditional fan-out of the full-corpus encode (see reencode_cells)
     from engine.session import parallelize_scan, scan_units
 
-    norm = parallelize_scan(_pq_norm(emb), scan_units(sf, "embeddings"))
-    cmeans = _pq_cell_means(norm, assigned)
-    cmeans.write.mode("overwrite").parquet(tmp + "/cmeans")
-    cmeans = spark.read.parquet(tmp + "/cmeans")
-    resid = _pq_residuals(norm, assigned, cmeans)
-    rvecs = resid.select("vec_id", "rv")
-    # the codebook is PART of the artifact (r13): a maintenance
-    # re-encode (reencode_cells) must quantize against the codebook
-    # the live codes were built with, not re-derive one from data
-    # that has since drifted
-    _pq_codebook(rvecs, "rv", _PQ_K_R).write.mode("overwrite").parquet(
-        tmp + "/cb"
-    )
-    enc = _pq_encode_against(
-        _pq_subs(rvecs, "rv"), spark.read.parquet(tmp + "/cb")
-    )
-    # cluster by cell before the partitioned write (guide §6): the
-    # fanned-out encode would otherwise emit one file per (task, cell)
-    # — thousands of tiny files the probed read path then pays for.
-    # Hash distribution puts each cell's rows in exactly one task.
-    enc.join(assigned, "vec_id").repartition("cell").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(tmp + "/codes")
-    try:
-        os.rename(tmp, root)  # the atomic publish
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # concurrent commit won
+    def build(tmp: str) -> None:
+        emb = T(spark, sf, "embeddings")
+        assigned = spark.read.parquet(materialize_assignments(spark, sf)).select(
+            "vec_id", F.col("cluster").alias("cell")
+        )
+        # conditional fan-out of the full-corpus encode (see reencode_cells)
+        norm = parallelize_scan(_pq_norm(emb), scan_units(sf, "embeddings"))
+        cmeans = _pq_cell_means(norm, assigned)
+        cmeans.write.mode("overwrite").parquet(tmp + "/cmeans")
+        cmeans = spark.read.parquet(tmp + "/cmeans")
+        resid = _pq_residuals(norm, assigned, cmeans)
+        rvecs = resid.select("vec_id", "rv")
+        # the codebook is PART of the artifact (r13): a maintenance
+        # re-encode (reencode_cells) must quantize against the codebook
+        # the live codes were built with, not re-derive one from data
+        # that has since drifted
+        _pq_codebook(rvecs, "rv", _PQ_K_R).write.mode("overwrite").parquet(
+            tmp + "/cb"
+        )
+        cb = spark.read.parquet(tmp + "/cb")
+        # ≤ _PQ_S × _PQ_K_R rows — driver-sized by construction
+        _check_codebook([(r["s"], r["cid"]) for r in cb.select("s", "cid").collect()])
+        enc = _pq_encode_against(_pq_subs(rvecs, "rv"), cb)
+        # cluster by cell before the partitioned write (guide §6): the
+        # fanned-out encode would otherwise emit one file per (task, cell)
+        # — thousands of tiny files the probed read path then pays for.
+        # Hash distribution puts each cell's rows in exactly one task.
+        enc.join(assigned, "vec_id").repartition("cell").write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(tmp + "/codes")
+
+    artifact(_pq_artifact_root(sf), build)
     return _pq_codes_path(sf)
+
+
+def _check_codebook(pairs: list) -> None:
+    """Raise unless every one of the _PQ_S subspaces holds cids exactly
+    0..K-1: :func:`_pq_encode_against` looks a winner's centroid up as
+    ``cents[cid + 1]``, so a gapped codebook would silently pair codes
+    with the wrong centroid. ``pairs`` are the codebook's (s, cid)."""
+    by_s: dict = {}
+    for sub, cid in pairs:
+        by_s.setdefault(int(sub), []).append(int(cid))
+    if sorted(by_s) != list(range(_PQ_S)):
+        raise ValueError(f"PQ codebook subspaces {sorted(by_s)} != 0..{_PQ_S - 1}")
+    for sub, cids in by_s.items():
+        if sorted(cids) != list(range(len(cids))):
+            raise ValueError(f"PQ codebook subspace {sub}: cids are not 0..K-1")
 
 
 def reencode_cells(spark: SparkSession, sf: str, cells: list[int]) -> str:
@@ -2628,17 +2591,13 @@ def reencode_cells(spark: SparkSession, sf: str, cells: list[int]) -> str:
       * the flagged cells' cmeans rows are REFRESHED from the cells'
         current content (exact 1e-9-unit integer means) and their
         residual codes re-encoded against the frozen codebook.
-    The generation publishes atomically (temp root + rename — the
-    materialize_pq_codes contract), so a reader always sees either the
-    old or the new complete artifact. Returns the new root.
+    Returns the new root, published with :func:`engine.session.artifact`
+    so a reader always sees either the old or the new complete artifact.
 
-    GENERATION MEMO (late r13 — the r12 fingerprint-addressing
-    precedent): the root is data-fingerprint-addressed and its content
-    is a pure function of (base artifact, cells), so a complete root
-    whose `_cells` marker matches the requested cell list AND the base
-    generation's tree token IS the artifact — a rerun (bench repeat, fresh process, the reindex step
-    calling through) reads instead of re-encoding. The marker is
-    written inside the temp root, atomic with the publish."""
+    GENERATION MEMO: the content is a pure function of (base artifact,
+    cells), so the artifact's ident is the requested cell list plus the
+    base generation's tree token — a rerun (bench repeat, fresh process,
+    the reindex step calling through) reads instead of re-encoding."""
     import json
     import os
     import pathlib
@@ -2648,77 +2607,71 @@ def reencode_cells(spark: SparkSession, sf: str, cells: list[int]) -> str:
 
     materialize_pq_codes(spark, sf)  # ensure the base generation
     src = _pq_artifact_root(sf)
-    dst = src + "_g1"
-    marker = json.dumps(
+    ident = json.dumps(
         {"cells": sorted(int(c) for c in cells), "src": _tree_token(src)}
     )
-    if _generation_fresh(dst, "_cells", marker):
-        return dst
-    tmp = f"{dst}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp + "/codes")
-    cellset = {f"cell={int(c)}" for c in cells}
-    for d in pathlib.Path(src, "codes").iterdir():
-        if d.is_dir() and d.name.startswith("cell=") and d.name not in cellset:
-            shutil.copytree(d, pathlib.Path(tmp, "codes", d.name))
-    shutil.copytree(src + "/cb", tmp + "/cb")  # frozen codebook
-    cl = [int(c) for c in cells]
-    emb = T(spark, sf, "embeddings")
-    flag_assigned = (
-        spark.read.parquet(materialize_assignments(spark, sf))
-        .select("vec_id", F.col("cluster").alias("cell"))
-        .filter(F.col("cell").isin(cl))  # ≤ K cells — driver-sized list
-    )
-    # fan the encode out over the cores (r14, guide §2.5 input skew):
-    # the local testdata ships single-row-group parquet, so without the
-    # conditional repartition the whole re-encode — residuals, subspace
-    # explode, K-candidate argmin — ran as ONE task (13.7 s measured in
-    # the cold generation build); at cluster scale the scan has natural
-    # parallelism and parallelize_scan is a no-op. Order-free: every
-    # downstream aggregate here is an exact integer sum or a quantized
-    # argmin with cid tie-break.
-    from engine.session import parallelize_scan, scan_units
 
-    norm = parallelize_scan(_pq_norm(emb), scan_units(sf, "embeddings"))
-    # the new flagged-cell means are computed ONCE and pinned
-    # (localCheckpoint) so the codes' residuals consume the same rows
-    # the published cmeans relation carries — without the former
-    # write-then-read-back barrier that serialized the cmeans write
-    # before the (much larger) re-encode; the two artifact writes are
-    # independent and run overlapped (guide §2.6).
-    cm_new = _pq_cell_means(norm, flag_assigned).localCheckpoint()
-    old_cm = spark.read.parquet(src + "/cmeans")
-    resid = _pq_residuals(norm, flag_assigned, cm_new)
-    enc = _pq_encode_against(
-        _pq_subs(resid.select("vec_id", "rv"), "rv"),
-        spark.read.parquet(tmp + "/cb"),
-    )
+    def build(tmp: str) -> None:
+        os.makedirs(tmp + "/codes")
+        cellset = {f"cell={int(c)}" for c in cells}
+        for d in pathlib.Path(src, "codes").iterdir():
+            if d.is_dir() and d.name.startswith("cell=") and d.name not in cellset:
+                shutil.copytree(d, pathlib.Path(tmp, "codes", d.name))
+        shutil.copytree(src + "/cb", tmp + "/cb")  # frozen codebook
+        cl = [int(c) for c in cells]
+        emb = T(spark, sf, "embeddings")
+        flag_assigned = (
+            spark.read.parquet(materialize_assignments(spark, sf))
+            .select("vec_id", F.col("cluster").alias("cell"))
+            .filter(F.col("cell").isin(cl))  # ≤ K cells — driver-sized list
+        )
+        # fan the encode out over the cores (r14, guide §2.5 input skew):
+        # the local testdata ships single-row-group parquet, so without the
+        # conditional repartition the whole re-encode — residuals, subspace
+        # explode, K-candidate argmin — ran as ONE task (13.7 s measured in
+        # the cold generation build); at cluster scale the scan has natural
+        # parallelism and parallelize_scan is a no-op. Order-free: every
+        # downstream aggregate here is an exact integer sum or a quantized
+        # argmin with cid tie-break.
+        from engine.session import parallelize_scan, scan_units
 
-    def _write_cmeans() -> None:
-        old_cm.filter(~F.col("cell").isin(cl)).unionByName(
-            cm_new
-        ).write.mode("overwrite").parquet(tmp + "/cmeans")
+        norm = parallelize_scan(_pq_norm(emb), scan_units(sf, "embeddings"))
+        # the new flagged-cell means are computed ONCE and pinned
+        # (localCheckpoint) so the codes' residuals consume the same rows
+        # the published cmeans relation carries — without the former
+        # write-then-read-back barrier that serialized the cmeans write
+        # before the (much larger) re-encode; the two artifact writes are
+        # independent and run overlapped (guide §2.6).
+        cm_new = _pq_cell_means(norm, flag_assigned).localCheckpoint()
+        old_cm = spark.read.parquet(src + "/cmeans")
+        resid = _pq_residuals(norm, flag_assigned, cm_new)
+        enc = _pq_encode_against(
+            _pq_subs(resid.select("vec_id", "rv"), "rv"),
+            spark.read.parquet(tmp + "/cb"),
+        )
 
-    def _write_codes() -> None:
-        # cell-clustering shuffle before the write — see
-        # materialize_pq_codes (one file per rewritten cell, not one
-        # per (task, cell))
-        enc.join(flag_assigned, "vec_id").repartition("cell").write.mode(
-            "append"
-        ).partitionBy("cell").parquet(tmp + "/codes")
+        def _write_cmeans() -> None:
+            old_cm.filter(~F.col("cell").isin(cl)).unionByName(
+                cm_new
+            ).write.mode("overwrite").parquet(tmp + "/cmeans")
 
-    from concurrent.futures import ThreadPoolExecutor
+        def _write_codes() -> None:
+            # cell-clustering shuffle before the write — see
+            # materialize_pq_codes (one file per rewritten cell, not one
+            # per (task, cell))
+            enc.join(flag_assigned, "vec_id").repartition("cell").write.mode(
+                "append"
+            ).partitionBy("cell").parquet(tmp + "/codes")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cm = pool.submit(_write_cmeans)
-        f_codes = pool.submit(_write_codes)
-        f_cm.result()
-        f_codes.result()
-    with open(tmp + "/_cells", "w") as fh:
-        fh.write(marker)
-    shutil.rmtree(dst, ignore_errors=True)
-    os.rename(tmp, dst)  # the atomic publish
-    return dst
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_cm = pool.submit(_write_cmeans)
+            f_codes = pool.submit(_write_codes)
+            f_cm.result()
+            f_codes.result()
+
+    return artifact(src + "_g1", build, ident)
 
 
 def _tree_token(root: str) -> str:
@@ -2740,27 +2693,6 @@ def _tree_token(root: str) -> str:
     return h.hexdigest()
 
 
-def _generation_fresh(root: str, marker_name: str, marker: str) -> bool:
-    """A derived artifact generation is fresh iff its root carries the
-    complete three-relation layout AND its identity marker matches the
-    requested derivation inputs — the root name already pins the
-    source-data fingerprint and algorithm version, the marker pins the
-    per-generation inputs (cell list / mover digest). Tests that
-    monkeypatch thresholds or feed synthetic mover sets change the
-    marker and force a rebuild instead of silently reusing."""
-    import os
-
-    if not all(
-        os.path.isdir(os.path.join(root, p)) for p in ("codes", "cmeans", "cb")
-    ):
-        return False
-    try:
-        with open(os.path.join(root, marker_name)) as fh:
-            return fh.read() == marker
-    except OSError:
-        return False
-
-
 def reindex_cells(
     spark: SparkSession, sf: str, moved: DataFrame, flagged: list[int]
 ) -> tuple[str, str]:
@@ -2779,13 +2711,12 @@ def reindex_cells(
         CARRIED mean, FROZEN codebook);
       * cmeans + codebook carry frozen — the reindex moves rows, the
         next retrain cycle refreshes statistics;
-      * atomic publish: temp root + rename, the materialize_pq_codes
-        contract.
+      * published with :func:`engine.session.artifact`.
     Returns (src_root, dst_root) so the caller can read back both
     generations' per-cell counts for the oracle-pinned report.
 
     GENERATION MEMO (late r13): g2's content is a pure function of
-    (source generation, mover set); the `_moved` marker pins an
+    (source generation, mover set); the artifact's ident pins an
     order-free digest of the mover relation (commutative
     bit_xor(xxhash64) + count — ONE aggregate over the churn-bounded,
     already-checkpointed movers; XOR cannot overflow under ANSI
@@ -2803,64 +2734,58 @@ def reindex_cells(
     else:
         materialize_pq_codes(spark, sf)
         src = _pq_artifact_root(sf)
-    dst = _pq_artifact_root(sf) + "_g2"
     dig = moved.agg(
         F.expr("bit_xor(xxhash64(vec_id, cell_from, cell_to))").alias("s"),
         F.count(F.lit(1)).alias("n"),
     ).first()
-    marker = json.dumps(
+    ident = json.dumps(
         {"src": _tree_token(src), "xor": dig["s"], "n": dig["n"]}
     )
-    if _generation_fresh(dst, "_moved", marker):
-        return src, dst
-    tmp = f"{dst}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp + "/codes")
-    dirty = {
-        int(r[0])
-        for r in moved.select(
-            F.explode(F.array("cell_from", "cell_to"))
-        )
-        .distinct()
-        .collect()  # ≤ K cells — driver-sized
-    }
-    for d in pathlib.Path(src, "codes").iterdir():
-        if d.is_dir() and d.name.startswith("cell="):
-            if int(d.name.split("=", 1)[1]) not in dirty:
-                shutil.copytree(d, pathlib.Path(tmp, "codes", d.name))
-    shutil.copytree(src + "/cb", tmp + "/cb")  # frozen codebook
-    shutil.copytree(src + "/cmeans", tmp + "/cmeans")  # frozen cmeans
-    if dirty:
-        dl = sorted(dirty)
-        surv = (
-            spark.read.parquet(src + "/codes")
-            .filter(F.col("cell").isin(dl))  # partition-pruned read
-            .join(F.broadcast(moved.select("vec_id")), "vec_id", "left_anti")
-        )
-        new_assigned = moved.select("vec_id", F.col("cell_to").alias("cell"))
-        # conditional fan-out of the mover re-encode (see reencode_cells)
-        from engine.session import parallelize_scan, scan_units
 
-        norm = parallelize_scan(
-            _pq_norm(T(spark, sf, "embeddings")), scan_units(sf, "embeddings")
-        )
-        cmn = spark.read.parquet(src + "/cmeans")
-        resid = _pq_residuals(norm, new_assigned, cmn)
-        enc = _pq_encode_against(
-            _pq_subs(resid.select("vec_id", "rv"), "rv"),
-            spark.read.parquet(src + "/cb"),
-        )
-        moved_rows = enc.join(new_assigned, "vec_id").select(surv.columns)
-        # cell-clustering shuffle before the write — see
-        # materialize_pq_codes
-        surv.unionByName(moved_rows).repartition("cell").write.mode(
-            "append"
-        ).partitionBy("cell").parquet(tmp + "/codes")
-    with open(tmp + "/_moved", "w") as fh:
-        fh.write(marker)
-    shutil.rmtree(dst, ignore_errors=True)
-    os.rename(tmp, dst)  # the atomic publish
-    return src, dst
+    def build(tmp: str) -> None:
+        os.makedirs(tmp + "/codes")
+        dirty = {
+            int(r[0])
+            for r in moved.select(
+                F.explode(F.array("cell_from", "cell_to"))
+            )
+            .distinct()
+            .collect()  # ≤ K cells — driver-sized
+        }
+        for d in pathlib.Path(src, "codes").iterdir():
+            if d.is_dir() and d.name.startswith("cell="):
+                if int(d.name.split("=", 1)[1]) not in dirty:
+                    shutil.copytree(d, pathlib.Path(tmp, "codes", d.name))
+        shutil.copytree(src + "/cb", tmp + "/cb")  # frozen codebook
+        shutil.copytree(src + "/cmeans", tmp + "/cmeans")  # frozen cmeans
+        if dirty:
+            dl = sorted(dirty)
+            surv = (
+                spark.read.parquet(src + "/codes")
+                .filter(F.col("cell").isin(dl))  # partition-pruned read
+                .join(F.broadcast(moved.select("vec_id")), "vec_id", "left_anti")
+            )
+            new_assigned = moved.select("vec_id", F.col("cell_to").alias("cell"))
+            # conditional fan-out of the mover re-encode (see reencode_cells)
+            from engine.session import parallelize_scan, scan_units
+
+            norm = parallelize_scan(
+                _pq_norm(T(spark, sf, "embeddings")), scan_units(sf, "embeddings")
+            )
+            cmn = spark.read.parquet(src + "/cmeans")
+            resid = _pq_residuals(norm, new_assigned, cmn)
+            enc = _pq_encode_against(
+                _pq_subs(resid.select("vec_id", "rv"), "rv"),
+                spark.read.parquet(src + "/cb"),
+            )
+            moved_rows = enc.join(new_assigned, "vec_id").select(surv.columns)
+            # cell-clustering shuffle before the write — see
+            # materialize_pq_codes
+            surv.unionByName(moved_rows).repartition("cell").write.mode(
+                "append"
+            ).partitionBy("cell").parquet(tmp + "/codes")
+
+    return src, artifact(_pq_artifact_root(sf) + "_g2", build, ident)
 
 
 @register("sim_cosine_topk_ivf_pq", sql=_ivf_pq_oracle_sql)

@@ -46,6 +46,7 @@ only for the engine's own query starts, never session-wide.
 
 from __future__ import annotations
 
+import json
 import os
 from contextlib import contextmanager
 from typing import Callable
@@ -63,7 +64,15 @@ from pyspark.sql.types import (
 
 from engine.canon import dround
 from engine.registry import register
-from engine.session import EVENTS_US_SQL, T, scratch_dir
+from engine.session import (
+    EVENTS_US_SQL,
+    T,
+    artifact,
+    artifact_path,
+    oracle_sf,
+    scratch_dir,
+    sf_tag,
+)
 from engine.session import tiny_df as _tiny_df
 
 
@@ -200,20 +209,36 @@ def _jvm_shards(sf: str) -> int:
     return max(4, min(16, n // 125_000))
 
 
-def _replay_path(sf: str, late: bool) -> str:
-    """Fixture location, fingerprinted on the SOURCE events parquet
-    (mtime+size) so a regenerated testdata can never be served a stale
-    replay — and so the artifact-pinned watermark oracles (which read
-    these slice files by absolute path) always see the fixture the
-    Spark run just built (the pagerank/LSH memoization contract)."""
-    from engine.session import data_fingerprint
+#: mtime of replay slice 0; slice k gets _SLICE_T0 + k
+_SLICE_T0 = 1_700_000_000
 
-    tag = (
-        os.path.basename(sf.rstrip("/"))
-        + ("_late" if late else "")
-        + "_" + data_fingerprint(sf, "events")
-    )
-    return scratch_dir(f"stream_replay_pq/{tag}")
+
+def _write_slice(fp: str, recs: list, cols: list, dtypes: dict, k: int) -> None:
+    pd.DataFrame(recs, columns=cols).astype(dtypes).to_parquet(fp, index=False)
+    os.utime(fp, (_SLICE_T0 + k, _SLICE_T0 + k))
+
+
+def _write_slices(
+    out: str, recs: list, cols: list, dtypes: dict, n_files: int
+) -> int:
+    """Write ``recs`` as at most ``n_files`` contiguous parquet slices
+    with ascending mtimes, so the file source triggers them in order;
+    returns the number of slices written."""
+    chunk = max(1, -(-len(recs) // n_files))
+    starts = range(0, len(recs), chunk)
+    for k, i in enumerate(starts):
+        _write_slice(
+            os.path.join(out, f"slice_{k:03d}.parquet"),
+            recs[i : i + chunk], cols, dtypes, k,
+        )
+    return len(starts)
+
+
+def _replay_path(sf: str, late: bool) -> str:
+    """Fixture location (:func:`engine.session.artifact_path` on the
+    events table) — the artifact-pinned watermark oracles read these
+    slice files by absolute path."""
+    return artifact_path("stream_replay_pq", sf, ("events",), "late" if late else "")
 
 
 def _replay_dir(spark: SparkSession, sf: str, late: bool) -> str:
@@ -225,49 +250,29 @@ def _replay_dir(spark: SparkSession, sf: str, late: bool) -> str:
     source is re-scanned once per micro-batch chain per run: columnar
     decode is ~5× cheaper than json line parse at sf0.1 and is also
     what a production stream's file-backed replay/backfill would use."""
-    path = _replay_path(sf, late)
-    marker = os.path.join(path, "_READY")
-    if os.path.exists(marker):
-        return path
-    rows = (
-        T(spark, sf, "events")
-        .select(
-            "event_id", F.unix_micros("ts").alias("ts_us"), "user_id",
-            "event_type", "value",
-        )
-        .orderBy("ts_us")
-        .collect()  # replay-fixture builder (test harness), not an operator
-    )
-    main = [r.asDict() for r in rows if not (late and r["event_id"] % 20 == 0)]
-    lates = [r.asDict() for r in rows if late and r["event_id"] % 20 == 0]
-    cols = ["event_id", "ts_us", "user_id", "event_type", "value"]
 
-    def write_slice(recs: list[dict], fp: str, mtime: int) -> None:
-        pdf = pd.DataFrame(recs, columns=cols).astype(
-            {"event_id": "int64", "ts_us": "int64", "user_id": "int64",
-             "value": "float64"}
+    def build(tmp: str) -> None:
+        rows = (
+            T(spark, sf, "events")
+            .select(
+                "event_id", F.unix_micros("ts").alias("ts_us"), "user_id",
+                "event_type", "value",
+            )
+            .orderBy("ts_us")
+            .collect()  # replay-fixture builder (test harness), not an operator
         )
-        pdf.to_parquet(fp, index=False)
-        os.utime(fp, (mtime, mtime))
+        main = [r.asDict() for r in rows if not (late and r["event_id"] % 20 == 0)]
+        lates = [r.asDict() for r in rows if late and r["event_id"] % 20 == 0]
+        cols = ["event_id", "ts_us", "user_id", "event_type", "value"]
+        dtypes = {"event_id": "int64", "ts_us": "int64", "user_id": "int64",
+                  "value": "float64"}
+        n = _write_slices(tmp, main, cols, dtypes, _REPLAY_FILES)
+        if late:
+            _write_slice(
+                os.path.join(tmp, f"slice_{n:03d}_late.parquet"), lates, cols, dtypes, n
+            )
 
-    chunk = max(1, (len(main) + _REPLAY_FILES - 1) // _REPLAY_FILES)
-    base_t = 1_700_000_000
-    n_files = 0
-    for i in range(0, len(main), chunk):
-        write_slice(
-            main[i : i + chunk],
-            os.path.join(path, f"slice_{n_files:03d}.parquet"),
-            base_t + n_files,
-        )
-        n_files += 1
-    if late:
-        write_slice(
-            lates,
-            os.path.join(path, f"slice_{n_files:03d}_late.parquet"),
-            base_t + n_files,
-        )
-    open(marker, "w").close()
-    return path
+    return artifact(_replay_path(sf, late), build)
 
 
 _REPLAY_SCHEMA = (
@@ -448,8 +453,6 @@ def _wm_late_oracle_sql() -> str:
       minus delay (the last batch's stats never drive an eviction here
       because the late slice does not advance the watermark).
     """
-    from engine.session import oracle_sf
-
     path = _replay_path(oracle_sf(), late=True)
     return f"""
     WITH sl AS (
@@ -794,7 +797,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf: str) -> DataFrame:
     ORACLE, making this the one true-streaming key with a full value-
     hash check."""
     path = _replay_dir(spark, sf, late=False)
-    tag = os.path.basename(sf.rstrip("/"))
+    tag = sf_tag(sf)
     base = scratch_dir(f"fb_upsert/{tag}")
     state = {"cur": None}
     # the state table's schema is fixed by the aggregate below — pass
@@ -877,8 +880,6 @@ def _session_timeout_oracle_sql() -> str:
     final data batch advanced the watermark) passed last_seen + gap.
     Users still active within (gap + delay) of stream end keep their
     last session open forever — exactly the unbounded-stream truth."""
-    from engine.session import oracle_sf
-
     path = _replay_path(oracle_sf(), late=False)
     return f"""
     WITH sl AS (SELECT * FROM read_parquet('{path}/*.parquet')),
@@ -1050,18 +1051,13 @@ _DC_FILES = 4
 
 
 def _doc_replay_path(sf: str) -> str:
-    from engine.session import data_fingerprint
-
-    tag = (
-        os.path.basename(sf.rstrip("/"))
-        + "_" + data_fingerprint(sf, "documents")
-        # slice count in the tag: a patched _DC_FILES (the scale probe
-        # runs fixed-size batches at several corpus sizes) must never be
-        # served a fixture sliced under a different count — the oracle's
-        # batch boundaries are derived from _DC_FILES at call time
-        + f"_f{_DC_FILES}"
+    # slice count in the name: a patched _DC_FILES (the scale probe runs
+    # fixed-size batches at several corpus sizes) must never be served a
+    # fixture sliced under a different count — the oracle's batch
+    # boundaries are derived from _DC_FILES at call time
+    return artifact_path(
+        "stream_doc_replay", sf, ("documents",), f"f{_DC_FILES}"
     )
-    return scratch_dir(f"stream_doc_replay/{tag}")
 
 
 def _doc_replay_dir(spark: SparkSession, sf: str) -> str:
@@ -1071,27 +1067,23 @@ def _doc_replay_dir(spark: SparkSession, sf: str) -> str:
     micro-batch k is EXACTLY slice k and arrival order is doc_id order.
     That determinism is what lets the incremental cascade be fully
     SQL-oracled: "arrived earlier" ≡ "smaller doc_id"."""
-    path = _doc_replay_path(sf)
-    marker = os.path.join(path, "_READY")
-    if os.path.exists(marker):
-        return path
-    rows = (
-        T(spark, sf, "documents")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .collect()  # replay-fixture builder (test harness), not an operator
-    )
-    chunk = max(1, -(-len(rows) // _DC_FILES))
-    base_t = 1_700_000_000
-    for i in range(0, len(rows), chunk):
-        fp = os.path.join(path, f"slice_{i // chunk:03d}.parquet")
-        pd.DataFrame(
-            [r.asDict() for r in rows[i : i + chunk]],
-            columns=["doc_id", "text"],
-        ).astype({"doc_id": "int64"}).to_parquet(fp, index=False)
-        os.utime(fp, (base_t + i // chunk, base_t + i // chunk))
-    open(marker, "w").close()
-    return path
+
+    def build(tmp: str) -> None:
+        rows = (
+            T(spark, sf, "documents")
+            .select("doc_id", "text")
+            .orderBy("doc_id")
+            .collect()  # replay-fixture builder (test harness), not an operator
+        )
+        _write_slices(
+            tmp,
+            [r.asDict() for r in rows],
+            ["doc_id", "text"],
+            {"doc_id": "int64"},
+            _DC_FILES,
+        )
+
+    return artifact(_doc_replay_path(sf), build)
 
 
 #: the cascade replayed in pure SQL: batch = contiguous doc_id chunk
@@ -1493,7 +1485,7 @@ def _run_dedup_cascade(
 
     tune(spark)
     path = _doc_replay_dir(spark, sf)
-    tag = os.path.basename(sf.rstrip("/"))
+    tag = sf_tag(sf)
     base = scratch_dir(f"{state_name}/{tag}")
     # fresh ledgers per run: the roots are append-only during the run,
     # so a prior run's rows must not leak in
@@ -1917,34 +1909,24 @@ def _emb_replay_dir(spark: SparkSession, sf: str) -> str:
     vec_id order — the _doc_replay_dir contract applied to the vector
     table, so micro-batch k is EXACTLY contiguous vec_id chunk k and
     the whole ingest unrolls in SQL."""
-    from engine.session import data_fingerprint
 
-    tag = (
-        os.path.basename(sf.rstrip("/"))
-        + "_" + data_fingerprint(sf, "embeddings")
-        + f"_f{_AI_FILES}"
-    )
-    path = scratch_dir(f"stream_emb_replay/{tag}")
-    marker = os.path.join(path, "_READY")
-    if os.path.exists(marker):
-        return path
-    rows = (
-        T(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .orderBy("vec_id")
-        .collect()  # replay-fixture builder (test harness), not an operator
-    )
-    chunk = max(1, -(-len(rows) // _AI_FILES))
-    base_t = 1_700_000_000
-    for i in range(0, len(rows), chunk):
-        fp = os.path.join(path, f"slice_{i // chunk:03d}.parquet")
-        pd.DataFrame(
-            [(r["vec_id"], list(r["embedding"])) for r in rows[i : i + chunk]],
-            columns=["vec_id", "embedding"],
-        ).astype({"vec_id": "int64"}).to_parquet(fp, index=False)
-        os.utime(fp, (base_t + i // chunk, base_t + i // chunk))
-    open(marker, "w").close()
-    return path
+    def build(tmp: str) -> None:
+        rows = (
+            T(spark, sf, "embeddings")
+            .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+            .orderBy("vec_id")
+            .collect()  # replay-fixture builder (test harness), not an operator
+        )
+        _write_slices(
+            tmp,
+            [(r["vec_id"], list(r["embedding"])) for r in rows],
+            ["vec_id", "embedding"],
+            {"vec_id": "int64"},
+            _AI_FILES,
+        )
+
+    path = artifact_path("stream_emb_replay", sf, ("embeddings",), f"f{_AI_FILES}")
+    return artifact(path, build)
 
 
 #: the ingest replayed in pure SQL — the CTE prefix every ANN ingest /
@@ -2006,7 +1988,7 @@ _AI_SQL = _AI_ASSIGN_CTES + """
 def _ai_oracle_sql() -> str:
     from engine.kmeans import _means_path
 
-    return _AI_SQL.format(files=_AI_FILES, means=_means_path("sf0_01"))
+    return _AI_SQL.format(files=_AI_FILES, means=_means_path(oracle_sf()))
 
 
 def _argmin_cell_sql(means: list[list[float]]) -> str:
@@ -2079,7 +2061,7 @@ def stream_ann_ingest(spark: SparkSession, sf: str) -> DataFrame:
     # never inside foreachBatch (the r11 plan-construction lesson)
     argmin_sql = _argmin_cell_sql(means)
     path = _emb_replay_dir(spark, sf)
-    tag = os.path.basename(sf.rstrip("/"))
+    tag = sf_tag(sf)
     store = scratch_dir(f"ann_ingest_store/{tag}")
     shutil.rmtree(store, ignore_errors=True)  # fresh index per run
     funnel: list[tuple[int, int, int, int]] = []
@@ -2197,14 +2179,13 @@ _AIT_SQL = _AI_FUNNEL_CTES + """,
 
 
 def _ait_oracle_sql() -> str:
-    from engine.kmeans import _means_path, _sf_tag
-    from engine.session import oracle_sf
+    from engine.kmeans import _means_path
 
     # means path resolved from the oracle's SF (SPARK_GRAFT_ORACLE_SF,
     # the r9 scan-oracle convention) so 3-SF sims compare like against
     # like — the Spark side materializes the same-SF artifact first
     return _AIT_SQL.format(
-        files=_AI_FILES, means=_means_path(_sf_tag(oracle_sf())), ttl=_AI_TTL
+        files=_AI_FILES, means=_means_path(oracle_sf()), ttl=_AI_TTL
     )
 
 
@@ -2251,7 +2232,7 @@ def stream_ann_ingest_ttl(spark: SparkSession, sf: str) -> DataFrame:
     _means_path_, means = materialize_means(spark, sf)
     argmin_sql = _argmin_cell_sql(means)
     path = _emb_replay_dir(spark, sf)
-    tag = os.path.basename(sf.rstrip("/"))
+    tag = sf_tag(sf)
     store = scratch_dir(f"ann_ingest_ttl_store/{tag}")
     shutil.rmtree(store, ignore_errors=True)  # fresh index per run
     # funnel rows: (batch, cell, n_assigned, sdu | None, live_rows)
@@ -2382,7 +2363,7 @@ def _rg_oracle_sql() -> str:
     from engine.kmeans import _means_path
 
     return _RG_SQL.format(
-        files=_AI_FILES, means=_means_path("sf0_01"), num=_RG_NUM, den=_RG_DEN
+        files=_AI_FILES, means=_means_path(oracle_sf()), num=_RG_NUM, den=_RG_DEN
     )
 
 
@@ -2593,12 +2574,11 @@ _RIX_SQL = (
 
 
 def _ras_oracle_sql() -> str:
-    from engine.kmeans import _means_path, _sf_tag
-    from engine.session import oracle_sf
+    from engine.kmeans import _means_path
 
     return _RAS_SQL.format(
         files=_AI_FILES,
-        means=_means_path(_sf_tag(oracle_sf())),
+        means=_means_path(oracle_sf()),
         num=_RA_NUM,
         den=_RA_DEN,
     )
@@ -2695,12 +2675,11 @@ def pipeline_ann_reassign(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _rix_oracle_sql() -> str:
-    from engine.kmeans import _means_path, _sf_tag
-    from engine.session import oracle_sf
+    from engine.kmeans import _means_path
 
     return _RIX_SQL.format(
         files=_AI_FILES,
-        means=_means_path(_sf_tag(oracle_sf())),
+        means=_means_path(oracle_sf()),
         num=_RA_NUM,
         den=_RA_DEN,
     )
@@ -2864,12 +2843,11 @@ _RAP_SQL = _AI_DRIFT_CTES + """,
 
 
 def _rap_oracle_sql() -> str:
-    from engine.kmeans import _means_path, _sf_tag
-    from engine.session import oracle_sf
+    from engine.kmeans import _means_path
 
     return _RAP_SQL.format(
         files=_AI_FILES,
-        means=_means_path(_sf_tag(oracle_sf())),
+        means=_means_path(oracle_sf()),
         num=_RA_NUM,
         den=_RA_DEN,
     )
@@ -2878,11 +2856,7 @@ def _rap_oracle_sql() -> str:
 def _retrained_means_path(sf: str) -> str:
     """The retrained coarse-quantizer generation — the atomic swap
     point future ingest assignment reads from."""
-    from engine.session import data_fingerprint
-
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    fp = data_fingerprint(sf, "embeddings")
-    return scratch_dir("ann_retrain") + f"/means_{tag}_{fp}"
+    return artifact_path("ann_retrain", sf, ("embeddings",), "means")
 
 
 @register("pipeline_ann_retrain_apply", sql=_rap_oracle_sql)
@@ -2981,8 +2955,8 @@ def pipeline_ann_retrain_apply(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("nm")
         )
         # PHYSICAL ACT 1 — the retrained coarse quantizer, published
-        # atomically (temp + rename): flagged centroids replaced,
-        # unflagged carried over
+        # as an artifact whose ident is the flagged cell list: flagged
+        # centroids replaced, unflagged carried over
         old_m = _tiny_df(
             spark,
             [(i, list(mm)) for i, mm in enumerate(means)],
@@ -2992,19 +2966,17 @@ def pipeline_ann_retrain_apply(spark: SparkSession, sf: str) -> DataFrame:
             "cell", F.coalesce("nm", "mean").alias("mean")
         )
         mpath = _retrained_means_path(sf)
-        tmp = f"{mpath}.tmp.{os.getpid()}"
 
         # PHYSICAL ACT 1 (quantizer publish) and ACT 2 (codes
         # generation rewrite) are independent — the reencode reads only
         # the codes artifact + flagged cells, never mpath — so they run
-        # overlapped (guide §2.6); the rename publish stays strictly
-        # after the quantizer write commits.
+        # overlapped (guide §2.6).
         def _publish_means() -> None:
-            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-            import shutil
-
-            shutil.rmtree(mpath, ignore_errors=True)
-            os.rename(tmp, mpath)
+            artifact(
+                mpath,
+                lambda tmp: merged.coalesce(1).write.mode("overwrite").parquet(tmp),
+                json.dumps(flagged),
+            )
 
         from concurrent.futures import ThreadPoolExecutor
 

@@ -562,35 +562,24 @@ def layout_zorder_cluster(spark: SparkSession, sf: str) -> DataFrame:
 def _binfiles_fixture(sf: str) -> str:
     """Plant a deterministic directory of small binary files (the first
     16 documents, utf-8 bytes) next to the scratch tree — the stand-in
-    for an image/audio landing zone. Path embeds the SOURCE fingerprint
-    (engine.session.data_fingerprint) so regenerated testdata can never
-    be compared against stale fixtures; built JVM-free with pyarrow."""
+    for an image/audio landing zone. An artifact of the documents table
+    (engine.session.artifact), built JVM-free with pyarrow."""
     import pathlib
 
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact, artifact_path
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    root = pathlib.Path(scratch_dir("binfiles")) / (
-        f"{tag}_{data_fingerprint(sf, 'documents')}"
-    )
-    done = root / "_DONE"
-    if not done.exists():
+    def build(tmp: str) -> None:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        t = pq.read_table(
-            f"{sf}/documents.parquet", columns=["doc_id", "text"]
-        )
+        t = pq.read_table(f"{sf}/documents.parquet", columns=["doc_id", "text"])
         t = t.filter(pc.less(t["doc_id"], 16))
-        root.mkdir(parents=True, exist_ok=True)
-        for doc_id, text in zip(
-            t["doc_id"].to_pylist(), t["text"].to_pylist()
-        ):
-            (root / f"doc_{doc_id:04d}.bin").write_bytes(
+        for doc_id, text in zip(t["doc_id"].to_pylist(), t["text"].to_pylist()):
+            (pathlib.Path(tmp) / f"doc_{doc_id:04d}.bin").write_bytes(
                 (text or "").encode("utf-8")
             )
-        done.write_text("")
-    return str(root)
+
+    return artifact(artifact_path("binfiles", sf, ("documents",)), build)
 
 
 def _binfile_oracle_sql() -> str:
@@ -823,29 +812,22 @@ def agg_quantile_multi(spark: SparkSession, sf: str) -> DataFrame:
 
 def _textlines_fixture(sf: str) -> str:
     """Plant a deterministic .txt file (first 200 document texts, one
-    per line, no trailing newline) — same fingerprint contract as the
+    per line, no trailing newline) — same artifact contract as the
     binaryFile fixture."""
     import pathlib
 
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact, artifact_path
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    root = pathlib.Path(scratch_dir("textlines")) / (
-        f"{tag}_{data_fingerprint(sf, 'documents')}"
-    )
-    out = root / "docs.txt"
-    if not out.exists():
+    def build(tmp: str) -> None:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         t = pq.read_table(f"{sf}/documents.parquet", columns=["doc_id", "text"])
         t = t.filter(pc.less(t["doc_id"], 200)).sort_by("doc_id")
-        root.mkdir(parents=True, exist_ok=True)
-        lines = [
-            (x or "").replace("\n", " ") for x in t["text"].to_pylist()
-        ]
-        out.write_text("\n".join(lines), encoding="utf-8")
-    return str(out)
+        lines = [(x or "").replace("\n", " ") for x in t["text"].to_pylist()]
+        (pathlib.Path(tmp) / "docs.txt").write_text("\n".join(lines), encoding="utf-8")
+
+    return artifact(artifact_path("textlines", sf, ("documents",)), build) + "/docs.txt"
 
 
 def _textlines_oracle_sql() -> str:
@@ -2255,16 +2237,15 @@ def agg_markov_transitions(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _seen_state_path(sf: str) -> str:
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact_path
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    return scratch_dir("dedup_state") + (
-        f"/seen_{tag}_{data_fingerprint(sf, 'documents')}"
-    )
+    return artifact_path("dedup_state", sf, ("documents",), "seen")
 
 
 def _incremental_dedup_sql() -> str:
-    path = _seen_state_path("/root/testdata/sf0.01")
+    from engine.session import oracle_sf
+
+    path = _seen_state_path(oracle_sf())
     return f"""
     WITH seen AS (SELECT h FROM read_parquet('{path}/*.parquet')),
     today AS (
@@ -2288,9 +2269,9 @@ def _incremental_dedup_sql() -> str:
 def pipeline_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental ingestion dedup — the shape a DAILY pipeline runs:
     yesterday's normalized content hashes are PERSISTED state (here the
-    even-doc_id half, materialized to parquet with the fingerprinted-
-    path contract); today's batch (odd half) left-joins that state to
-    split already-seen from genuinely new docs. This is the batch twin
+    even-doc_id half, an engine.session.artifact); today's batch (odd
+    half) left-joins that state to split already-seen from genuinely new
+    docs. This is the batch twin
     of stream_dedup_watermark's in-flight state — at 100 TB the state
     table is itself partitioned/bucketed BY HASH so the daily anti-join
     is co-located, and compaction of the state is an append-only merge.
@@ -2298,21 +2279,17 @@ def pipeline_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     The hash is md5 of trim(lower(text)) — the dedup_exact normalize
     contract — evaluated identically by both engines; counts are
     integer-exact."""
-    import os
+    from engine.session import artifact, parallelize_scan, scan_units
 
-    from engine.session import parallelize_scan, scan_units
-
-    path = _seen_state_path(sf)
     d = parallelize_scan(T(spark, sf, "documents"), scan_units(sf, "documents"))
     h = F.md5(F.trim(F.lower(F.col("text"))))
-    if not os.path.exists(path + "/_SUCCESS"):
-        (
-            d.filter(F.col("doc_id") % 2 == 0)
-            .select(h.alias("h"))
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+
+    def build(tmp: str) -> None:
+        d.filter(F.col("doc_id") % 2 == 0).select(h.alias("h")).distinct().write.mode(
+            "overwrite"
+        ).parquet(tmp)
+
+    path = artifact(_seen_state_path(sf), build)
     seen = spark.read.parquet(path)
     today = d.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "source", h.alias("h")
@@ -2826,16 +2803,15 @@ def agg_trimmed_mean(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sorted_write_path(sf: str) -> str:
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact_path
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    return scratch_dir("sorted_write") + (
-        f"/li_{tag}_{data_fingerprint(sf, 'lineitem')}"
-    )
+    return artifact_path("sorted_write", sf, ("lineitem",), "li")
 
 
 def _sorted_write_oracle_sql() -> str:
-    path = _sorted_write_path("/root/testdata/sf0.01")
+    from engine.session import oracle_sf
+
+    path = _sorted_write_path(oracle_sf())
     return f"""
     SELECT parse_filename(file_name) AS fname,
            CAST(row_group_id AS BIGINT) AS rg,
@@ -2860,27 +2836,26 @@ def sink_sorted_clustered_write(spark: SparkSession, sf: str) -> DataFrame:
     space (non-overlap asserted in tests) — verified from the physical
     artifact rather than assumed from the plan.
 
-    The write is fingerprint-memoized (the kmeans-artifact contract);
-    the metadata probe is JVM-free (the scan_units precedent), row
+    The write is an artifact (engine.session.artifact); the metadata
+    probe is JVM-free (the scan_units precedent), row
     counts and key bounds are exact integers on both engines."""
-    import os
     import pathlib
 
     import pyarrow.parquet as pq
 
-    path = _sorted_write_path(sf)
-    if not os.path.exists(path + "/_SUCCESS"):
+    from engine.session import artifact
+
+    def build(tmp: str) -> None:
         li = T(spark, sf, "lineitem").select(
             F.unix_micros(F.col("l_shipdate").cast("timestamp")).alias("k"),
             "l_orderkey",
             "l_quantity",
         )
-        (
-            li.repartitionByRange(8, "k")
-            .sortWithinPartitions("k")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+        li.repartitionByRange(8, "k").sortWithinPartitions("k").write.mode(
+            "overwrite"
+        ).parquet(tmp)
+
+    path = artifact(_sorted_write_path(sf), build)
     rows = []
     for f in sorted(pathlib.Path(path).glob("*.parquet")):
         md = pq.ParquetFile(f).metadata

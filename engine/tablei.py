@@ -1902,24 +1902,20 @@ def _manifest_fixture(sf: str) -> str:
     data files (orders sliced by o_orderkey % 4) plus a _log/ of
     JSON-lines commits — v0 adds part-0/part-1, v1 adds part-2 and
     REMOVES part-1, v2 adds part-3, so the live snapshot is
-    {part-0, part-2, part-3}. Path embeds the source fingerprint
+    {part-0, part-2, part-3}. An artifact of the orders table
     (the scan_binaryfile contract); built JVM-free with pyarrow."""
     import json as _json
     import pathlib
 
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact, artifact_path
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    root = pathlib.Path(scratch_dir("manifest")) / (
-        f"{tag}_{data_fingerprint(sf, 'orders')}"
-    )
-    done = root / "_DONE"
-    if not done.exists():
+    def build(tmp: str) -> None:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        root = pathlib.Path(tmp)
         t = pq.read_table(f"{sf}/orders.parquet")
-        (root / "_log").mkdir(parents=True, exist_ok=True)
+        (root / "_log").mkdir()
         key_mod = pc.bit_wise_and(t["o_orderkey"], 3)
         for i in range(4):
             pq.write_table(
@@ -1939,8 +1935,8 @@ def _manifest_fixture(sf: str) -> str:
                     for s, a in enumerate(actions)
                 )
             )
-        done.write_text("")
-    return str(root)
+
+    return artifact(artifact_path("manifest", sf, ("orders",)), build)
 
 
 def _manifest_oracle_sql() -> str:

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from engine.canon import dround, floordiv_sql
 from engine.registry import register
-from engine.session import EVENTS_US_SQL, T, tiny_df
+from engine.session import EVENTS_US_SQL, T, oracle_sf, tiny_df
 
 # --------------------------------------------------------------------------
 # HDR-histogram (log-linear) quantile sketch — lineitem prices
@@ -560,7 +560,7 @@ def pipeline_dataset_diff(spark: SparkSession, sf: str) -> DataFrame:
 def _vacuum_oracle_sql() -> str:
     from engine.tablei import _manifest_fixture
 
-    path = _manifest_fixture("/root/testdata/sf0.01")
+    path = _manifest_fixture(oracle_sf())
     return f"""
     WITH log AS (
       SELECT version, seq, op, file
@@ -649,26 +649,21 @@ def _dv_fixture(sf: str) -> str:
     by o_orderkey % 3) plus a dv.parquet sidecar of POSITIONAL deletes
     — (file, pos) pairs marking row ordinals pos % 7 == 3 of part-0 and
     part-2 as deleted (part-1 carries no delete vector: the common case
-    of untouched files must stay on the fast path). Path embeds the
-    source fingerprint (the scan_binaryfile contract); built JVM-free
+    of untouched files must stay on the fast path). An artifact of the
+    orders table (the scan_binaryfile contract); built JVM-free
     with pyarrow."""
     import pathlib
 
     import pyarrow as pa
 
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import artifact, artifact_path
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    root = pathlib.Path(scratch_dir("dv_table")) / (
-        f"{tag}_{data_fingerprint(sf, 'orders')}"
-    )
-    done = root / "_DONE"
-    if not done.exists():
+    def build(tmp: str) -> None:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        root = pathlib.Path(tmp)
         t = pq.read_table(f"{sf}/orders.parquet")
-        root.mkdir(parents=True, exist_ok=True)
         key_mod = pc.cast(
             pc.subtract(
                 t["o_orderkey"], pc.multiply(pc.divide(t["o_orderkey"], 3), 3)
@@ -687,12 +682,12 @@ def _dv_fixture(sf: str) -> str:
             pa.table({"file": dv_files, "pos": pa.array(dv_pos, pa.int64())}),
             root / "dv.parquet",
         )
-        done.write_text("")
-    return str(root)
+
+    return artifact(artifact_path("dv_table", sf, ("orders",)), build)
 
 
 def _dv_oracle_sql() -> str:
-    path = _dv_fixture("/root/testdata/sf0.01")
+    path = _dv_fixture(oracle_sf())
     return f"""
     WITH data AS (
       SELECT o_orderstatus, o_totalprice,

@@ -659,13 +659,13 @@ def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
     import pathlib
     import shutil
 
-    from engine.session import data_fingerprint, scratch_dir
+    from engine.session import data_fingerprint, scratch_dir, sf_tag
 
     try:
         spark.dataSource.register(_DetSinkSource)
     except Exception:
         pass
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+    tag = sf_tag(sf)
     root = pathlib.Path(scratch_dir("pysink")) / (
         f"{tag}_{data_fingerprint(sf, 'orders')}"
     )

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from engine.canon import dround
 from engine.registry import register
-from engine.session import T, scratch_cache, scratch_dir, tiny_df
+from engine.session import T, artifact, artifact_path, scratch_cache, tiny_df
 
 # --------------------------------------------------------------------------
 # Adamic-Adar link prediction (affinity graph, degree-weighted wedges)
@@ -159,38 +159,24 @@ def scan_partition_evolution(spark: SparkSession, sf: str) -> DataFrame:
         dround(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
         "o_orderdate",
     )
-    # the two-layout fixture is memoized per source fingerprint (the
-    # affinity-edges/IVF contract): the daily layout alone is ~365
-    # directories whose rewrite dominated the key (~6 s of commit
-    # overhead at sf0.1) while the layouts are a pure function of
-    # orders — regenerated testdata changes the fingerprint and
-    # rebuilds; within a fingerprint the write happens once
-    from engine.session import data_fingerprint
+    # the two-layout fixture is an artifact (engine.session.artifact):
+    # the daily layout alone is ~365 directories whose rewrite dominated
+    # the key (~6 s of commit overhead at sf0.1) while the layouts are a
+    # pure function of orders
+    def build(tmp: str) -> None:
+        o.filter(F.year("o_orderdate") <= 1996).withColumn(
+            "month_str", F.date_format("o_orderdate", "yyyy-MM")
+        ).select("o_orderkey", "cents", "month_str").write.mode(
+            "overwrite"
+        ).partitionBy("month_str").parquet(tmp + "/monthly")
+        o.filter(F.year("o_orderdate") == 1997).withColumn(
+            "day_str", F.date_format("o_orderdate", "yyyy-MM-dd")
+        ).select("o_orderkey", "cents", "day_str").write.mode(
+            "overwrite"
+        ).partitionBy("day_str").parquet(tmp + "/daily")
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    fp = data_fingerprint(sf, "orders")
-    out_m = scratch_dir(f"part_evolution/monthly_{tag}_{fp}")
-    out_d = scratch_dir(f"part_evolution/daily_{tag}_{fp}")
-    import os
-
-    if not os.path.exists(os.path.join(out_m, "_SUCCESS")):
-        (
-            o.filter(F.year("o_orderdate") <= 1996)
-            .withColumn("month_str", F.date_format("o_orderdate", "yyyy-MM"))
-            .select("o_orderkey", "cents", "month_str")
-            .write.mode("overwrite")
-            .partitionBy("month_str")
-            .parquet(out_m)
-        )
-    if not os.path.exists(os.path.join(out_d, "_SUCCESS")):
-        (
-            o.filter(F.year("o_orderdate") == 1997)
-            .withColumn("day_str", F.date_format("o_orderdate", "yyyy-MM-dd"))
-            .select("o_orderkey", "cents", "day_str")
-            .write.mode("overwrite")
-            .partitionBy("day_str")
-            .parquet(out_d)
-        )
+    out = artifact(artifact_path("part_evolution", sf, ("orders",)), build)
+    out_m, out_d = out + "/monthly", out + "/daily"
     a = (
         spark.read.parquet(out_m)
         .filter(F.col("month_str") == _PE_MONTH_A)

@@ -569,7 +569,7 @@ def test_stream_ann_ingest_assignment_rule_and_store_layout(spark):
 
     import engine.streaming as S
     from engine.kmeans import materialize_means
-    from engine.session import scratch_dir
+    from engine.session import scratch_dir, sf_tag
 
     got = [
         (r["batch_id"], r["cell"], r["n_assigned"], r["avg_dist"])
@@ -612,7 +612,7 @@ def test_stream_ann_ingest_assignment_rule_and_store_layout(spark):
         (b, c, n, round(a, 6)) for b, c, n, a in expected
     ]
     # store layout: cell=... partition dirs, total rows == corpus
-    tag = SF_SMOKE.rstrip("/").rsplit("/", 1)[-1]
+    tag = sf_tag(SF_SMOKE)
     store = pathlib.Path(scratch_dir(f"ann_ingest_store/{tag}"))
     cells = sorted(
         int(p.name.split("=")[1]) for p in store.iterdir() if p.name.startswith("cell=")
@@ -716,7 +716,7 @@ def test_cascade_compaction_and_dynfilter_result_invariance(spark):
     import pathlib
 
     import engine.streaming as S
-    from engine.session import scratch_dir
+    from engine.session import scratch_dir, sf_tag
 
     def funnel():
         return [
@@ -729,7 +729,7 @@ def test_cascade_compaction_and_dynfilter_result_invariance(spark):
     try:
         S._DC_COMPACT_FILES = 0  # compact every touched bucket, every batch
         compacted = funnel()
-        tag = SF_SMOKE.rstrip("/").rsplit("/", 1)[-1]
+        tag = sf_tag(SF_SMOKE)
         base = pathlib.Path(scratch_dir(f"dedup_cascade_state/{tag}"))
         for store in ("hashes", "buckets"):
             for d in (base / store).glob("*=*"):
@@ -829,10 +829,10 @@ def test_cascade_pruned_read_plan_two_level_filters(spark):
     row-group stats/dictionary skipping once row groups are
     production-sized)."""
     import engine.streaming as S
-    from engine.session import scratch_dir
+    from engine.session import scratch_dir, sf_tag
 
     QUERIES["stream_dedup_cascade"](spark, SF_SMOKE).collect()
-    root = scratch_dir("dedup_cascade_state/sf0.001/hashes")
+    root = scratch_dir(f"dedup_cascade_state/{sf_tag(SF_SMOKE)}/hashes")
     df = (
         spark.read.parquet(root)
         .filter(S._sql_in("pb", {0, 1}))
@@ -1092,8 +1092,8 @@ def test_stream_ingest_e2e_fuses_gate_and_cascade(spark):
 
 
 def test_generation_publish_memo_and_crash_recovery(spark):
-    """The r13 generation-memo contract (reencode_cells /
-    _generation_fresh): (a) a second derivation with the same inputs is
+    """The generation-memo contract (reencode_cells through
+    engine.session.artifact): (a) a second derivation with the same inputs is
     a pure READ — every published file byte-identical, nothing
     rewritten; (b) a stale identity marker forces a full rebuild whose
     RELATION equals the original (parquet file names carry job UUIDs,
@@ -1134,12 +1134,12 @@ def test_generation_publish_memo_and_crash_recovery(spark):
     (junk / "codes").mkdir(parents=True)
     (junk / "codes" / "garbage").write_text("partial build")
     # (b) stale marker → deterministic rebuild, marker restored
-    marker = pathlib.Path(g1, "_cells")
+    marker = pathlib.Path(g1, "_ARTIFACT")
     saved = marker.read_text()
     marker.write_text("[999]")
     g1b = SIM.reencode_cells(spark, sf, flagged)
     assert g1b == g1
-    assert pathlib.Path(g1b, "_cells").read_text() == saved
+    assert pathlib.Path(g1b, "_ARTIFACT").read_text() == saved
     assert rows(g1b) == rows1, "rebuild must reproduce the relation"
     assert junk.is_dir(), "stale temp must never be adopted or renamed"
     shutil.rmtree(junk)
@@ -1293,10 +1293,10 @@ def test_duplicate_epoch_delivery_is_noop(spark, key, state_name):
     is byte-identical before/after each duplicate call, and (b) the
     funnel equals the clean single-delivery run's."""
     import engine.streaming as S
-    from engine.session import scratch_dir
+    from engine.session import scratch_dir, sf_tag
 
     clean = [tuple(r) for r in QUERIES[key](spark, SF_SMOKE).collect()]
-    tag = SF_SMOKE.rstrip("/").rsplit("/", 1)[-1]
+    tag = sf_tag(SF_SMOKE)
     base = scratch_dir(f"{state_name}/{tag}")
 
     noop_flags: list[bool] = []
@@ -1351,7 +1351,7 @@ def test_ann_ingest_ttl_expiry_fires_and_bounds_store(spark):
     live-window vectors (space reclamation, the TTL cascade's
     contract applied to the vector store)."""
     import engine.streaming as S
-    from engine.session import scratch_dir
+    from engine.session import scratch_dir, sf_tag
 
     old = S._DC_COMPACT_FILES
     try:
@@ -1379,7 +1379,7 @@ def test_ann_ingest_ttl_expiry_fires_and_bounds_store(spark):
     assert fired
     # (b) the store holds only live-window rows after the final
     # retention-applying compaction (live = batch_id >= last - TTL)
-    tag = SF_SMOKE.rstrip("/").rsplit("/", 1)[-1]
+    tag = sf_tag(SF_SMOKE)
     store = scratch_dir(f"ann_ingest_ttl_store/{tag}")
     stored = spark.read.parquet(store)
     assert stored.filter(F.col("batch_id") < last - S._AI_TTL).count() == 0
@@ -1392,7 +1392,7 @@ def test_ttl_cascade_retention_bounds_ledger_rows(spark):
     size is O(window), not O(corpus). (Reads filter the window
     regardless; this pins the space-reclamation half.)"""
     import engine.streaming as S
-    from engine.session import scratch_dir
+    from engine.session import scratch_dir, sf_tag
 
     old = S._DC_COMPACT_FILES
     try:
@@ -1400,7 +1400,7 @@ def test_ttl_cascade_retention_bounds_ledger_rows(spark):
         QUERIES["stream_dedup_cascade_ttl"](spark, SF_SMOKE).collect()
     finally:
         S._DC_COMPACT_FILES = old
-    tag = SF_SMOKE.rstrip("/").rsplit("/", 1)[-1]
+    tag = sf_tag(SF_SMOKE)
     base = scratch_dir(f"dedup_cascade_ttl_state/{tag}")
     # last batch index is 3 (4 slices); its compaction ran with
     # live = batch_id >= 3 - TTL

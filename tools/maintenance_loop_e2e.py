@@ -65,14 +65,13 @@ def main() -> int:
     import engine.streaming as S
     from engine.kmeans import _MEANS_CACHE, kmeans_fit
     from engine.registry import all_queries
-    from engine.session import T, data_fingerprint, get_spark, scratch_dir
+    from engine.session import T, data_fingerprint, get_spark, scratch_dir, sf_tag
 
     spark = get_spark("loop-e2e")
     spark.sparkContext.setLogLevel("ERROR")
 
     # 1. synthetic SF dir: every table carried over, embeddings drifted
-    tag = os.path.basename(args.src.rstrip("/")).replace(".", "_")
-    sf = scratch_dir("loop_e2e") + f"/drift_{tag}"
+    sf = scratch_dir("loop_e2e") + f"/drift_{sf_tag(args.src)}"
     shutil.rmtree(sf, ignore_errors=True)
     os.makedirs(sf)
     for f in os.listdir(args.src):
