@@ -1353,8 +1353,8 @@ def _compact_ledger_buckets(
     rewrite commits (ADVICE r12): a failure mid-rewrite leaves every
     source file in place — reads window-filter / join on exact keys,
     so a surviving stale dir is never a correctness hazard, only
-    bytes. Only COMMITTED epochs reach compaction (callers mark the
-    epoch before compacting), so a folded epoch can never be
+    bytes. Only COMMITTED epochs reach compaction (:func:`_epoch_sink`
+    marks the epoch before compacting), so a folded epoch can never be
     re-delivered. Bucket partition values compare as STRINGS
     (type-generic across partition-column types, ADVICE r12).
     Returns the number of buckets compacted (incl. expired-deleted)."""
@@ -1441,6 +1441,71 @@ def _clear_epoch_leftovers(roots: list[str], epoch_id: int) -> None:
             shutil.rmtree(d, ignore_errors=True)
 
 
+def _epoch_sink(base: str, roots: list[str], body: Callable) -> Callable:
+    """``sink`` for :func:`_run_stream` that owns the idempotent commit
+    protocol of an epoch-keyed state store (r13 — VERDICT r12 task 3).
+    foreachBatch delivers at least once: on restart after a failure the
+    failed epoch is delivered again. Each delivery of ``epoch_id``:
+
+      1. is a full no-op when the epoch's marker
+         (:func:`_epoch_marker` under ``base``) exists — the epoch is
+         COMMITTED, its funnel rows and store bytes are already in
+         (byte-identical skip, pinned by test);
+      2. otherwise removes the ``epoch=<epoch_id>`` dirs under ``roots``
+         — the partial appends of a failed delivery — so the redo
+         appends from clean instead of double-appending;
+      3. returns on an empty batch without calling the body and without
+         using up a batch index (defensive, ADVICE r11: later batches
+         would shift off the oracles' file-slice numbering);
+      4. calls ``body(batch_df, epoch_id, k, submit)``. ``k`` counts the
+         committed non-empty epochs, so a redelivered epoch gets the
+         same index. The body submits its terminal actions — the
+         epoch-keyed appends into ``<part>=<v>/epoch=<epoch_id>`` and
+         its funnel action — through ``submit`` (ThreadPoolExecutor.
+         submit of the sink's one pool), each as soon as its plan is
+         complete, so independent actions overlap (guide §2.6);
+      5. joins every submitted action — also when the body raises, so
+         no append is still in flight when a redo clears the epoch —
+         and only then writes the marker: a failure in any action
+         leaves the epoch unmarked for the redo path;
+      6. after the commit, runs the follow-up the body returned (its
+         funnel bookkeeping and compaction). Compaction after the marker
+         means a folded epoch is never re-delivered into a double
+         append; a redo that skipped it is covered by the next batch's
+         threshold check (compaction is maintenance, never semantics).
+
+    The _DC_BATCH_WRAPPER hook wraps the whole protocol."""
+    from concurrent.futures import Future, ThreadPoolExecutor
+
+    committed = [0]
+
+    def deliver(batch_df: DataFrame, epoch_id: int) -> None:
+        marker = _epoch_marker(base, epoch_id)
+        if os.path.exists(marker):
+            return
+        _clear_epoch_leftovers(roots, epoch_id)
+        if batch_df.isEmpty():
+            return
+        submitted: list[Future] = []
+        with ThreadPoolExecutor(max_workers=3) as pool:
+
+            def submit(fn: Callable, *args) -> Future:
+                f = pool.submit(fn, *args)
+                submitted.append(f)
+                return f
+
+            after = body(batch_df, epoch_id, committed[0], submit)
+            for f in submitted:
+                f.result()
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        open(marker, "w").close()
+        committed[0] += 1
+        if after is not None:
+            after()
+
+    return _foreach_batch(deliver)
+
+
 def _run_dedup_cascade(
     spark: SparkSession,
     sf: str,
@@ -1458,24 +1523,15 @@ def _run_dedup_cascade(
     vector. Semantics per mode are documented on the registered
     wrappers; every plan decision (prebuilt SQL expressions, capped
     dynamic IN, localCheckpoint placement, threshold compaction) is
-    shared and was A/B-measured in r11/r12 (BASELINE.md).
-
-    Epoch-keyed idempotent appends (r13 — VERDICT r12 task 3): every
-    append lands under the bucket's epoch=<epoch_id> subdir, and the
-    epoch is COMMITTED by a marker file written after both ledgers'
-    appends. A re-delivered epoch (foreachBatch redelivers the failed
-    epoch on restart-after-failure) is either (a) marked → full no-op,
-    or (b) unmarked → its partial epoch-keyed dirs are deleted and the
-    batch redone from clean. Funnel rows and ledger bytes are identical
-    under duplicate delivery (pinned by test at 3 SFs).
+    shared and was A/B-measured in r11/r12 (BASELINE.md). Both ledgers
+    commit through :func:`_epoch_sink`, which holds the epoch protocol.
 
     ``prefilter`` (late r13 — the fused ingest pipeline): an optional
-    per-batch gate, called as prefilter(batch_df, k) AFTER the epoch
-    no-op/empty checks and BEFORE any hashing; rows it removes never
-    touch the ledgers (the state-size win fusion exists for). A batch
-    the gate empties still flows through — zero funnel row, epoch
-    committed — so idempotency is unchanged (_sql_in treats empty key
-    sets as match-nothing)."""
+    per-batch gate, called as prefilter(batch_df, k, submit) BEFORE any
+    hashing; rows it removes never touch the ledgers (the state-size
+    win fusion exists for). A batch the gate empties still flows
+    through — zero funnel row, epoch committed — so idempotency is
+    unchanged (_sql_in treats empty key sets as match-nothing)."""
     import pathlib
     import shutil
 
@@ -1510,20 +1566,10 @@ def _run_dedup_cascade(
     h_schema = f"hh long{ttl_extra}, pb int, epoch int"
     b_schema = f"band int, h long{ttl_extra}, pbb int, epoch int"
 
-    def cascade(batch_df: DataFrame, epoch_id: int) -> None:
+    def cascade(batch_df: DataFrame, epoch_id: int, k: int, submit: Callable):
         sp = batch_df.sparkSession
-        k = len(funnel)
-        marker = _epoch_marker(base, epoch_id)
-        if os.path.exists(marker):
-            # duplicate delivery of a COMMITTED epoch — full no-op:
-            # funnel row already appended, ledgers already hold the
-            # epoch's rows (byte-identical skip, pinned by test)
-            return
-        _clear_epoch_leftovers([hroot, broot], epoch_id)
-        if batch_df.isEmpty():  # defensive: empty trigger, no funnel row
-            return
         if prefilter is not None:
-            batch_df = prefilter(batch_df, k)
+            batch_df = prefilter(batch_df, k, submit)
         # COALESCE before hashing: md5(NULL) is NULL, and a NULL hh
         # never equi-matches the ledger — NULL-text docs hash as ''
         # so they dedupe as ONE group on both engines (review r10).
@@ -1610,8 +1656,7 @@ def _run_dedup_cascade(
         # end of the batch, serializing a write-job latency per batch.
         # TTL mode: the bucket append too (its rows need no anti-join
         # in TTL mode), overlapping it with the bkeys collect + pruned
-        # store read. The epoch marker still waits on ALL terminal
-        # actions, so the idempotent-redelivery contract is unchanged.
+        # store read.
         ecol = F.lit(int(epoch_id))
         if ttl is None:
             new_h = surv_e.select("pb", "hh")
@@ -1629,192 +1674,169 @@ def _run_dedup_cascade(
                 "append"
             ).partitionBy("pb", "epoch").parquet(hroot)
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=3)
-        try:
-            f_h = pool.submit(_w_h)
-            # repartition BEFORE the MinHash signature expression (guide
-            # §2.5 input skew / §4 per-task work): lab is AQE-coalesced to
-            # 1-2 partitions, so without this the shingle+hash pipeline —
-            # the batch's single most expensive expression — ran in ONE
-            # task (~1 s/batch measured, 4-5× the rest of the batch's
-            # stages combined). The shuffle moves only the survivors' (id,
-            # text) once; signature results are set-semantics downstream,
-            # so row placement cannot affect any output.
-            bands_b = (
-                bands_of(surv_e.select("doc_id", "text").repartition(parts))
-                .withColumn("pbb", F.pmod("h", bcol).cast("int"))
-                .localCheckpoint()  # consumed 4×: self-join ×2, semi, append
-            )
-            in_batch = (
-                bands_b.alias("a")
-                .join(
-                    bands_b.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.h") == F.col("b.h"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .select(F.col("b.doc_id").alias("doc_id"))
-            )
-
-            # O(batch) appends into the partitions the rows hash to, keyed
-            # by epoch subdir (idempotent redelivery — see docstring).
-            # Unbounded mode: the batch's survivor hashes are new by
-            # construction (seen-flag filter above), bucket rows are
-            # anti-joined against the pruned store read so the ledger stays
-            # a SET without being rewritten. TTL mode: EVERY arrival
-            # refreshes the clock — the batch's distinct hashes (rn = 1
-            # picks one row per hh) append stamped with batch k, no
-            # anti-join: the batch column keys recurrence where the
-            # unbounded twin needed set semantics.
-            # repartition ON the partition column first: without it every
-            # shuffle task writes its own file into every pb dir (tasks×B
-            # tiny files per batch — measured +4 s/sweep in committer
-            # overhead); with it each pb dir gains ONE file per batch.
-            # sortWithinPartitions on the join key (VERDICT r11 task 7):
-            # sorted files give row groups tight min/max + dictionary
-            # stats, so the pushed dynamic IN filter can skip inside a
-            # bucket once row groups are meaningful at production sizes
-            def _w_b_of(nb: DataFrame):
-                def _w_b() -> None:
-                    nb.withColumn("epoch", ecol).repartition(
-                        "pbb"
-                    ).sortWithinPartitions("pbb", "band", "h").write.mode(
-                        "append"
-                    ).partitionBy("pbb", "epoch").parquet(broot)
-
-                return _w_b
-
-            f_b = None
-            if ttl is not None:
-                # TTL bucket rows need no anti-join, so this append's plan
-                # is complete as soon as bands_b is checkpointed — submit
-                # it now, overlapped with the bkeys collect + pruned store
-                # read below
-                f_b = pool.submit(
-                    _w_b_of(
-                        bands_b.select("pbb", "band", "h")
-                        .distinct()
-                        .withColumn("batch_id", F.lit(k))
-                    )
-                )
-            if state["has_b"]:
-                # same two-level pruning as the hash ledger: pbb partition
-                # prune + dynamic IN on the batch's minhash values (h alone
-                # — a superset filter of the (band, h) join key, so every
-                # possible match survives; bands_b is checkpointed, the
-                # collect does not recompute it)
-                bkeys = (
-                    bands_b.select("pbb", "h")
-                    .distinct()
-                    .limit(_DC_DYNFILTER_CAP + 1)
-                    .collect()
-                )
-                prev_b = sp.read.schema(b_schema).parquet(broot)
-                if live is not None:
-                    prev_b = prev_b.filter(live)
-                if len(bkeys) <= _DC_DYNFILTER_CAP:
-                    prev_b = prev_b.filter(
-                        _sql_in("pbb", {r["pbb"] for r in bkeys})
-                    ).filter(_sql_in("h", {r["h"] for r in bkeys}))
-                else:
-                    pbbs = {
-                        r[0]
-                        for r in bands_b.select("pbb").distinct().collect()
-                    }
-                    prev_b = prev_b.filter(_sql_in("pbb", pbbs))
-                if _DC_READ_PROBE is not None:
-                    _probe_b = (_ledger_rows(broot), prev_b.count())
-                vs_store = bands_b.join(
-                    prev_b, ["pbb", "band", "h"], "left_semi"
-                ).select("doc_id")
-                near_ids = in_batch.unionByName(vs_store).distinct()
-            else:
-                if _DC_READ_PROBE is not None:
-                    _probe_b = (0, 0)
-                prev_b = None
-                near_ids = in_batch.distinct()
-            # ONE funnel action: near_ids ⊆ exact-survivors and exact-drops
-            # have rn>1 or seen, so the three labels are disjoint and
-            # survivors fall out by difference
-            funnel_df = lab.join(
-                near_ids.withColumn("isnear", F.lit(1)), "doc_id", "left"
-            ).agg(
-                F.count(F.lit(1)).alias("arrived"),
-                F.count(
-                    F.when((F.col("rn") > 1) | F.col("seen").isNotNull(), 1)
-                ).alias("ex"),
-                F.count("isnear").alias("nr"),
-            )
-            # Unbounded mode: the bucket append's anti-join needs the
-            # pruned store read, so its plan only completes here
-            if f_b is None:
-                new_b = bands_b.select("pbb", "band", "h").distinct()
-                if prev_b is not None:
-                    new_b = new_b.join(prev_b, ["pbb", "band", "h"], "left_anti")
-                f_b = pool.submit(_w_b_of(new_b))
-            # The terminal actions of a batch — the funnel aggregate and
-            # the two ledger appends — are INDEPENDENT of each other (all
-            # consume the checkpointed lab/bands_b) and each was submitted
-            # at the earliest point its plan was complete (guide §2.6):
-            # the hash append right after lab's checkpoint, the bucket
-            # append after bands_b (TTL) or the pruned read (unbounded),
-            # the funnel here. The epoch marker is written only after ALL
-            # complete, so the idempotent redelivery contract is unchanged
-            # — a failure in any of them leaves the epoch unmarked and the
-            # redo path cleans the epoch-keyed dirs.
-            f_row = pool.submit(funnel_df.first)
-            row = f_row.result()
-            f_h.result()
-            f_b.result()
-        finally:
-            # join the writer threads even on a failing batch: the
-            # epoch stays unmarked (redo path cleans it), and no
-            # append may still be in flight when the caller rebuilds
-            # or removes the ledger roots
-            pool.shutdown(wait=True)
-        arrived, n_ex, n_nr = row["arrived"], row["ex"], row["nr"]
-        funnel.append((k, arrived, n_ex, n_nr, arrived - n_ex - n_nr))
-        # COMMIT the epoch: appends are in; a re-delivery from here on
-        # is a no-op. Compaction runs after the commit — a folded epoch
-        # can therefore never be re-delivered into a double-append, and
-        # a redo skipped past compaction is covered by the next batch's
-        # threshold check (compaction is maintenance, never semantics).
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        open(marker, "w").close()
-        # threshold-triggered per-bucket compaction (VERDICT r11 task
-        # 1): bounds files/bucket regardless of batch count, so pruned
-        # reads never pay O(batches) listing/footer costs — driver-side
-        # listing when below threshold, O(bucket) rewrite when hit.
-        # TTL mode passes the live window as retain: expired rows drop
-        # during the rewrite (space reclamation only; reads filter the
-        # window regardless of when compaction last ran)
-        ncomp = _compact_ledger_buckets(
-            sp, hroot, "pb", ["hh"], retain=live
-        ) + _compact_ledger_buckets(
-            sp, broot, "pbb", ["band", "h"], retain=live
+        submit(_w_h)
+        # repartition BEFORE the MinHash signature expression (guide
+        # §2.5 input skew / §4 per-task work): lab is AQE-coalesced to
+        # 1-2 partitions, so without this the shingle+hash pipeline —
+        # the batch's single most expensive expression — ran in ONE
+        # task (~1 s/batch measured, 4-5× the rest of the batch's
+        # stages combined). The shuffle moves only the survivors' (id,
+        # text) once; signature results are set-semantics downstream,
+        # so row placement cannot affect any output.
+        bands_b = (
+            bands_of(surv_e.select("doc_id", "text").repartition(parts))
+            .withColumn("pbb", F.pmod("h", bcol).cast("int"))
+            .localCheckpoint()  # consumed 4×: self-join ×2, semi, append
         )
-        # flags from the filesystem (no Spark job): an all-short-docs
-        # batch can append zero bucket rows, and a zero-file root must
-        # not be read next batch
-        state["has_h"] = any(pathlib.Path(hroot).rglob("*.parquet"))
-        state["has_b"] = any(pathlib.Path(broot).rglob("*.parquet"))
-        if _DC_READ_PROBE is not None:
-            _DC_READ_PROBE.append(
-                {
-                    "batch": k,
-                    "arrived": arrived,
-                    "h_ledger": _probe_h[0],
-                    "h_scanned": _probe_h[1],
-                    "b_ledger": _probe_b[0],
-                    "b_scanned": _probe_b[1],
-                    # post-append, post-compaction file bounds
-                    "h_files_max": _ledger_files_max(hroot),
-                    "b_files_max": _ledger_files_max(broot),
-                    "compacted": ncomp,
-                }
+        in_batch = (
+            bands_b.alias("a")
+            .join(
+                bands_b.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.h") == F.col("b.h"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
             )
+            .select(F.col("b.doc_id").alias("doc_id"))
+        )
+
+        # O(batch) appends into the partitions the rows hash to, keyed
+        # by epoch subdir (the _epoch_sink redelivery unit).
+        # Unbounded mode: the batch's survivor hashes are new by
+        # construction (seen-flag filter above), bucket rows are
+        # anti-joined against the pruned store read so the ledger stays
+        # a SET without being rewritten. TTL mode: EVERY arrival
+        # refreshes the clock — the batch's distinct hashes (rn = 1
+        # picks one row per hh) append stamped with batch k, no
+        # anti-join: the batch column keys recurrence where the
+        # unbounded twin needed set semantics.
+        # repartition ON the partition column first: without it every
+        # shuffle task writes its own file into every pb dir (tasks×B
+        # tiny files per batch — measured +4 s/sweep in committer
+        # overhead); with it each pb dir gains ONE file per batch.
+        # sortWithinPartitions on the join key (VERDICT r11 task 7):
+        # sorted files give row groups tight min/max + dictionary
+        # stats, so the pushed dynamic IN filter can skip inside a
+        # bucket once row groups are meaningful at production sizes
+        def _w_b_of(nb: DataFrame):
+            def _w_b() -> None:
+                nb.withColumn("epoch", ecol).repartition(
+                    "pbb"
+                ).sortWithinPartitions("pbb", "band", "h").write.mode(
+                    "append"
+                ).partitionBy("pbb", "epoch").parquet(broot)
+
+            return _w_b
+
+        if ttl is not None:
+            # TTL bucket rows need no anti-join, so this append's plan
+            # is complete as soon as bands_b is checkpointed — submit
+            # it now, overlapped with the bkeys collect + pruned store
+            # read below
+            submit(
+                _w_b_of(
+                    bands_b.select("pbb", "band", "h")
+                    .distinct()
+                    .withColumn("batch_id", F.lit(k))
+                )
+            )
+        if state["has_b"]:
+            # same two-level pruning as the hash ledger: pbb partition
+            # prune + dynamic IN on the batch's minhash values (h alone
+            # — a superset filter of the (band, h) join key, so every
+            # possible match survives; bands_b is checkpointed, the
+            # collect does not recompute it)
+            bkeys = (
+                bands_b.select("pbb", "h")
+                .distinct()
+                .limit(_DC_DYNFILTER_CAP + 1)
+                .collect()
+            )
+            prev_b = sp.read.schema(b_schema).parquet(broot)
+            if live is not None:
+                prev_b = prev_b.filter(live)
+            if len(bkeys) <= _DC_DYNFILTER_CAP:
+                prev_b = prev_b.filter(
+                    _sql_in("pbb", {r["pbb"] for r in bkeys})
+                ).filter(_sql_in("h", {r["h"] for r in bkeys}))
+            else:
+                pbbs = {
+                    r[0] for r in bands_b.select("pbb").distinct().collect()
+                }
+                prev_b = prev_b.filter(_sql_in("pbb", pbbs))
+            if _DC_READ_PROBE is not None:
+                _probe_b = (_ledger_rows(broot), prev_b.count())
+            vs_store = bands_b.join(
+                prev_b, ["pbb", "band", "h"], "left_semi"
+            ).select("doc_id")
+            near_ids = in_batch.unionByName(vs_store).distinct()
+        else:
+            if _DC_READ_PROBE is not None:
+                _probe_b = (0, 0)
+            prev_b = None
+            near_ids = in_batch.distinct()
+        # ONE funnel action: near_ids ⊆ exact-survivors and exact-drops
+        # have rn>1 or seen, so the three labels are disjoint and
+        # survivors fall out by difference
+        funnel_df = lab.join(
+            near_ids.withColumn("isnear", F.lit(1)), "doc_id", "left"
+        ).agg(
+            F.count(F.lit(1)).alias("arrived"),
+            F.count(
+                F.when((F.col("rn") > 1) | F.col("seen").isNotNull(), 1)
+            ).alias("ex"),
+            F.count("isnear").alias("nr"),
+        )
+        # Unbounded mode: the bucket append's anti-join needs the
+        # pruned store read, so its plan only completes here
+        if ttl is None:
+            new_b = bands_b.select("pbb", "band", "h").distinct()
+            if prev_b is not None:
+                new_b = new_b.join(prev_b, ["pbb", "band", "h"], "left_anti")
+            submit(_w_b_of(new_b))
+        # the terminal actions — the funnel aggregate and the two ledger
+        # appends — all consume the checkpointed lab/bands_b, so they
+        # are independent; each went in at the earliest point its plan
+        # was complete
+        row = submit(funnel_df.first).result()
+
+        def commit() -> None:
+            arrived, n_ex, n_nr = row["arrived"], row["ex"], row["nr"]
+            funnel.append((k, arrived, n_ex, n_nr, arrived - n_ex - n_nr))
+            # threshold-triggered per-bucket compaction (VERDICT r11
+            # task 1): bounds files/bucket regardless of batch count, so
+            # pruned reads never pay O(batches) listing/footer costs —
+            # driver-side listing when below threshold, O(bucket)
+            # rewrite when hit. TTL mode passes the live window as
+            # retain: expired rows drop during the rewrite (space
+            # reclamation only; reads filter the window regardless of
+            # when compaction last ran)
+            ncomp = _compact_ledger_buckets(
+                sp, hroot, "pb", ["hh"], retain=live
+            ) + _compact_ledger_buckets(
+                sp, broot, "pbb", ["band", "h"], retain=live
+            )
+            # flags from the filesystem (no Spark job): an all-short-docs
+            # batch can append zero bucket rows, and a zero-file root
+            # must not be read next batch
+            state["has_h"] = any(pathlib.Path(hroot).rglob("*.parquet"))
+            state["has_b"] = any(pathlib.Path(broot).rglob("*.parquet"))
+            if _DC_READ_PROBE is not None:
+                _DC_READ_PROBE.append(
+                    {
+                        "batch": k,
+                        "arrived": arrived,
+                        "h_ledger": _probe_h[0],
+                        "h_scanned": _probe_h[1],
+                        "b_ledger": _probe_b[0],
+                        "b_scanned": _probe_b[1],
+                        # post-append, post-compaction file bounds
+                        "h_files_max": _ledger_files_max(hroot),
+                        "b_files_max": _ledger_files_max(broot),
+                        "compacted": ncomp,
+                    }
+                )
+
+        return commit
 
     # executeTake escalation kill (guide §1/§7: many tiny sequential
     # jobs): the capped key collects (`distinct().limit(cap+1).collect()`)
@@ -1824,7 +1846,7 @@ def _run_dedup_cascade(
     # here; restored after the run.
     _run_stream(
         _slice_stream(spark, "doc_id long, text string", path),
-        _foreach_batch(cascade),
+        _epoch_sink(base, [hroot, broot], cascade),
         shards=parts,
         confs={"spark.sql.limit.initialNumPartitions": "1024"},
     )
@@ -1892,8 +1914,8 @@ def stream_dedup_cascade(spark: SparkSession, sf: str) -> DataFrame:
     cascade — batch assignment, exact ranks, band buckets, funnel —
     replays in pure SQL under the portable md5 hash family.
 
-    Batch body + epoch-keyed idempotent appends: :func:`_run_dedup_cascade`
-    (shared with the TTL variant — VERDICT r12 tasks 7 and 3)."""
+    Batch body: :func:`_run_dedup_cascade` (shared with the TTL variant
+    — VERDICT r12 task 7); epoch commit: :func:`_epoch_sink`."""
     return _run_dedup_cascade(spark, sf, "dedup_cascade_state", ttl=None)
 
 
@@ -2015,6 +2037,131 @@ def _argmin_cell_sql(means: list[list[float]]) -> str:
     )
 
 
+def _ann_assign(df: DataFrame, argmin_sql: str) -> DataFrame:
+    """(vec_id, embedding, cell, du): each row of ``df`` assigned to its
+    nearest centroid by the prebuilt :func:`_argmin_cell_sql`
+    expression — a per-row projection, no Exchange (plan-gated)."""
+    return df.select(
+        "vec_id", "embedding", F.expr(argmin_sql).alias("b")
+    ).select(
+        "vec_id",
+        "embedding",
+        F.col("b.cell").alias("cell"),
+        F.col("b.du").alias("du"),
+    )
+
+
+def _run_ann_ingest(
+    spark: SparkSession, sf: str, state_name: str, ttl: int | None
+) -> DataFrame:
+    """The ONE batch body behind stream_ann_ingest (ttl=None) and
+    stream_ann_ingest_ttl (ttl=_AI_TTL): assign each arriving batch to
+    the frozen centroids, append it into the cell-partitioned store
+    under ``scratch_dir(<state_name>/<sf tag>)`` and record the
+    per-cell funnel; the store commits through :func:`_epoch_sink`.
+    The TTL mode differs in three places only: appends stamp the
+    arrival ``batch_id``, the funnel gains the post-append
+    ``live_rows`` read, and compaction applies the live window as
+    ``retain``. Semantics per mode are documented on the registered
+    wrappers."""
+    import shutil
+
+    from engine.kmeans import materialize_means
+    from engine.session import tune
+
+    tune(spark)
+    _means_path_, means = materialize_means(spark, sf)
+    # the argmin expression is prebuilt ONCE from the frozen centroids —
+    # never inside foreachBatch (the r11 plan-construction lesson)
+    argmin_sql = _argmin_cell_sql(means)
+    path = _emb_replay_dir(spark, sf)
+    store = scratch_dir(f"{state_name}/{sf_tag(sf)}")
+    shutil.rmtree(store, ignore_errors=True)  # fresh index per run
+    # funnel rows: (batch, cell, n_assigned, sdu | None[, live_rows])
+    funnel: list[tuple] = []
+
+    def ingest(batch_df: DataFrame, epoch_id: int, k: int, submit: Callable):
+        sp = batch_df.sparkSession
+        # consumed twice: funnel agg + store append
+        assigned = _ann_assign(batch_df, argmin_sql).localCheckpoint()
+        rows = assigned.select("cell", "vec_id", "embedding")
+        live = None
+        if ttl is not None:
+            # batch_id is a data column (the retention key), epoch the
+            # idempotency subdir
+            rows = rows.withColumn("batch_id", F.lit(k))
+            live = F.col("batch_id") >= F.lit(k - ttl)
+        f_arr = submit(
+            assigned.groupBy("cell")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("du").alias("sdu"))
+            .collect  # ≤ k-cells rows — observability-sized
+        )
+        # one partitioned write per batch, never a rewrite of the
+        # existing cells
+        f_append = submit(
+            rows.withColumn("epoch", F.lit(int(epoch_id)))
+            .write.mode("append")
+            .partitionBy("cell", "epoch")
+            .parquet,
+            store,
+        )
+        arr = {r["cell"]: (r["n"], r["sdu"]) for r in f_arr.result()}
+        if ttl is None:
+            batch_rows = [(k, c, n, sdu) for c, (n, sdu) in arr.items()]
+        else:
+            # the live read stays strictly AFTER the append: the window
+            # [k-TTL, k] includes this batch's own arrivals. Explicit
+            # schema (guide §6): skips the per-batch footer-inference
+            # job; column pruning drops the vectors from the count
+            f_append.result()
+            lv = (
+                sp.read.schema(
+                    "vec_id long, embedding array<double>, batch_id int,"
+                    " cell int, epoch int"
+                )
+                .parquet(store)
+                .filter(live)
+                .groupBy("cell")
+                .agg(F.count(F.lit(1)).alias("lv"))
+                .collect()  # ≤ k-cells rows
+            )
+            batch_rows = [
+                (k, r["cell"], *arr.get(r["cell"], (0, None)), r["lv"])
+                for r in sorted(lv, key=lambda r: r["cell"])
+            ]
+
+        def commit() -> None:
+            funnel.extend(batch_rows)
+            # same LSM bound as the cascade ledgers (r12): a cell dir
+            # gains one file per touching batch, so trickle ingest needs
+            # the threshold compaction too — one dynamic-overwrite job
+            # for all due cells, sorted by vec_id for point-lookup
+            # row-group stats. TTL mode: expired vectors drop during the
+            # rewrite; fully-expired cells delete
+            _compact_ledger_buckets(sp, store, "cell", ["vec_id"], retain=live)
+
+        return commit
+
+    _run_stream(
+        _slice_stream(spark, "vec_id long, embedding array<double>", path),
+        _epoch_sink(store, [store], ingest),
+        shards=8,
+    )
+    schema = "batch_id int, cell int, n_assigned long, sdu long"
+    live_col = []
+    if ttl is not None:
+        schema += ", live_rows long"
+        live_col = ["live_rows"]
+    out = _tiny_df(spark, funnel, schema)
+    return out.select(
+        "batch_id",
+        "cell",
+        "n_assigned",
+        dround(F.col("sdu") / F.col("n_assigned") / 1e6, 6).alias("avg_dist"),
+        *live_col,
+    ).orderBy("batch_id", "cell")
+
+
 @register("stream_ann_ingest", sql=_ai_oracle_sql)
 def stream_ann_ingest(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming ANN index ingestion (VERDICT r10 task 8 — the
@@ -2049,100 +2196,7 @@ def stream_ann_ingest(spark: SparkSession, sf: str) -> DataFrame:
     deterministic chunk boundaries (the _doc_replay_dir contract), the
     centroids are the pinned artifact, and the funnel unrolls in pure
     SQL (_AI_SQL)."""
-    import shutil
-
-    from engine.canon import dround
-    from engine.kmeans import materialize_means
-    from engine.session import tune
-
-    tune(spark)
-    _means_path_, means = materialize_means(spark, sf)
-    # the argmin expression is prebuilt ONCE from the frozen centroids —
-    # never inside foreachBatch (the r11 plan-construction lesson)
-    argmin_sql = _argmin_cell_sql(means)
-    path = _emb_replay_dir(spark, sf)
-    tag = sf_tag(sf)
-    store = scratch_dir(f"ann_ingest_store/{tag}")
-    shutil.rmtree(store, ignore_errors=True)  # fresh index per run
-    funnel: list[tuple[int, int, int, int]] = []
-    nbatch = [0]  # own counter: funnel holds PER-CELL rows, not batches
-
-    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = _epoch_marker(store, epoch_id)
-        if os.path.exists(marker):
-            # duplicate delivery of a COMMITTED epoch (r13 — VERDICT
-            # r12 task 3): funnel rows already appended, the store
-            # already holds the epoch's vectors — full no-op
-            return
-        _clear_epoch_leftovers([store], epoch_id)
-        if batch_df.isEmpty():
-            # defensive (ADVICE r11): an empty trigger must not consume
-            # a batch id — later batches would shift off the oracle's
-            # file-slice numbering (mirrors the cascade's guard)
-            return
-        k = nbatch[0]
-        nbatch[0] += 1
-        assigned = (
-            batch_df.select(
-                "vec_id", "embedding", F.expr(argmin_sql).alias("b")
-            )
-            .select(
-                "vec_id",
-                "embedding",
-                F.col("b.cell").alias("cell"),
-                F.col("b.du").alias("du"),
-            )
-            .localCheckpoint()  # consumed twice: funnel agg + store append
-        )
-        # funnel aggregate and store append both consume the
-        # checkpointed `assigned` and are independent — overlapped
-        # (guide §2.6), same shape as the cascade's terminal actions.
-        # The append: one partitioned write per batch, never a rewrite
-        # of the existing cells; keyed by epoch subdir so a re-delivered
-        # failed epoch redoes from clean (_run_dedup_cascade contract)
-        def _append() -> None:
-            assigned.select("cell", "vec_id", "embedding").withColumn(
-                "epoch", F.lit(int(epoch_id))
-            ).write.mode("append").partitionBy("cell", "epoch").parquet(store)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_rows = pool.submit(
-                assigned.groupBy("cell")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("du").alias("sdu"))
-                .collect  # ≤ k-cells rows — observability-sized
-            )
-            f_append = pool.submit(_append)
-            rows = f_rows.result()
-            f_append.result()
-        for r in rows:
-            funnel.append((k, r["cell"], r["n"], r["sdu"]))
-        # COMMIT the epoch before maintenance (see _run_dedup_cascade)
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        open(marker, "w").close()
-        # same LSM bound as the cascade ledgers (r12): a cell dir gains
-        # one file per touching batch, so trickle ingest needs the
-        # threshold compaction too — one dynamic-overwrite job for all
-        # due cells, sorted by vec_id for point-lookup row-group stats
-        _compact_ledger_buckets(
-            batch_df.sparkSession, store, "cell", ["vec_id"]
-        )
-
-    _run_stream(
-        _slice_stream(spark, "vec_id long, embedding array<double>", path),
-        _foreach_batch(ingest),
-        shards=8,
-    )
-    out = _tiny_df(
-        spark, funnel, "batch_id int, cell int, n_assigned long, sdu long"
-    )
-    return out.select(
-        "batch_id",
-        "cell",
-        "n_assigned",
-        dround(F.col("sdu") / F.col("n_assigned") / 1e6, 6).alias("avg_dist"),
-    ).orderBy("batch_id", "cell")
+    return _run_ann_ingest(spark, sf, "ann_ingest_store", ttl=None)
 
 
 #: live window of the TTL'd ANN ingest store, in batches — the vector
@@ -2222,111 +2276,7 @@ def stream_ann_ingest_ttl(spark: SparkSession, sf: str) -> DataFrame:
     so the live store size is a pure window sum over the assignment
     funnel — no recursion, same replay fixture and pinned centroids as
     the ingest."""
-    import shutil
-
-    from engine.canon import dround
-    from engine.kmeans import materialize_means
-    from engine.session import tune
-
-    tune(spark)
-    _means_path_, means = materialize_means(spark, sf)
-    argmin_sql = _argmin_cell_sql(means)
-    path = _emb_replay_dir(spark, sf)
-    tag = sf_tag(sf)
-    store = scratch_dir(f"ann_ingest_ttl_store/{tag}")
-    shutil.rmtree(store, ignore_errors=True)  # fresh index per run
-    # funnel rows: (batch, cell, n_assigned, sdu | None, live_rows)
-    funnel: list[tuple[int, int, int, int | None, int]] = []
-    nbatch = [0]
-
-    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = _epoch_marker(store, epoch_id)
-        if os.path.exists(marker):
-            return  # duplicate delivery of a committed epoch — no-op
-        _clear_epoch_leftovers([store], epoch_id)
-        if batch_df.isEmpty():
-            return  # empty trigger must not consume a batch id
-        k = nbatch[0]
-        nbatch[0] += 1
-        assigned = (
-            batch_df.select(
-                "vec_id", "embedding", F.expr(argmin_sql).alias("b")
-            )
-            .select(
-                "vec_id",
-                "embedding",
-                F.col("b.cell").alias("cell"),
-                F.col("b.du").alias("du"),
-            )
-            .localCheckpoint()  # consumed twice: funnel agg + append
-        )
-        # funnel aggregate and store append both consume the
-        # checkpointed `assigned` and are independent — overlapped
-        # (guide §2.6); the live read below stays strictly AFTER the
-        # append (the window [k-TTL, k] includes this batch's own
-        # arrivals). batch_id is a data column (the retention key),
-        # epoch the idempotency subdir.
-        def _append() -> None:
-            assigned.select("cell", "vec_id", "embedding").withColumn(
-                "batch_id", F.lit(k)
-            ).withColumn("epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).partitionBy("cell", "epoch").parquet(store)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_arr = pool.submit(
-                assigned.groupBy("cell")
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("du").alias("sdu"))
-                .collect  # ≤ k-cells rows — observability-sized
-            )
-            f_append = pool.submit(_append)
-            arr = {r["cell"]: (r["n"], r["sdu"]) for r in f_arr.result()}
-            f_append.result()
-        live = F.col("batch_id") >= F.lit(k - _AI_TTL)
-        # explicit schema (guide §6): skips the per-batch footer-
-        # inference job; only cell/batch_id are read (column pruning
-        # drops the vectors from the live count)
-        lv = (
-            spark.read.schema(
-                "vec_id long, embedding array<double>, batch_id int,"
-                " cell int, epoch int"
-            )
-            .parquet(store)
-            .filter(live)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("lv"))
-            .collect()  # ≤ k-cells rows
-        )
-        for r in sorted(lv, key=lambda r: r["cell"]):
-            n, sdu = arr.get(r["cell"], (0, None))
-            funnel.append((k, r["cell"], n, sdu, r["lv"]))
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        open(marker, "w").close()
-        # retention-applying compaction: expired vectors drop during
-        # the threshold rewrite; fully-expired cells delete
-        _compact_ledger_buckets(
-            batch_df.sparkSession, store, "cell", ["vec_id"], retain=live
-        )
-
-    _run_stream(
-        _slice_stream(spark, "vec_id long, embedding array<double>", path),
-        _foreach_batch(ingest),
-        shards=8,
-    )
-    out = _tiny_df(
-        spark,
-        funnel,
-        "batch_id int, cell int, n_assigned long, sdu long, live_rows long",
-    )
-    return out.select(
-        "batch_id",
-        "cell",
-        "n_assigned",
-        dround(F.col("sdu") / F.col("n_assigned") / 1e6, 6).alias("avg_dist"),
-        "live_rows",
-    ).orderBy("batch_id", "cell")
+    return _run_ann_ingest(spark, sf, "ann_ingest_ttl_store", ttl=_AI_TTL)
 
 
 # --------------------------------------------------------------------------
@@ -3160,8 +3110,8 @@ def stream_dedup_cascade_ttl(spark: SparkSession, sf: str) -> DataFrame:
     last-seen refresh makes dup status a join against prior ARRIVALS,
     not prior survivors.
 
-    Batch body + epoch-keyed idempotent appends: :func:`_run_dedup_cascade`
-    (shared with the unbounded cascade — VERDICT r12 tasks 7 and 3)."""
+    Batch body: :func:`_run_dedup_cascade` (shared with the unbounded
+    cascade — VERDICT r12 task 7); epoch commit: :func:`_epoch_sink`."""
     return _run_dedup_cascade(
         spark, sf, "dedup_cascade_ttl_state", ttl=_DC_TTL
     )
@@ -3485,11 +3435,11 @@ def stream_ingest_e2e(spark: SparkSession, sf: str) -> DataFrame:
     # the per-batch broadcast rebuilds from memory, no file jobs); same
     # session, so the foreachBatch closure can reference it directly.
     ev_grams = _eval_grams_snapshot(spark, sf)
-    removed: list[tuple[int, int]] = []
+    # raw arrivals per batch index: keyed, so a redelivered epoch (same
+    # index from _epoch_sink) overwrites instead of adding a row
+    removed: dict[int, int] = {}
 
-    def gate(batch_df: DataFrame, k: int) -> DataFrame:
-        from concurrent.futures import ThreadPoolExecutor
-
+    def gate(batch_df: DataFrame, k: int, submit: Callable) -> DataFrame:
         hits = (
             _doc_8grams(batch_df.filter(F.col("doc_id") % 97 != 0))
             .join(F.broadcast(ev_grams), "s")
@@ -3508,18 +3458,17 @@ def stream_ingest_e2e(spark: SparkSession, sf: str) -> DataFrame:
         # body consumes it repeatedly) and the raw count — share only
         # batch_df, so they run overlapped (guide §2.6) instead of
         # paying two sequential per-batch job latencies.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_keep = pool.submit(keep_plan.localCheckpoint)
-            f_cnt = pool.submit(batch_df.count)
-            keep = f_keep.result()
-            removed.append((k, f_cnt.result()))
+        f_keep = submit(keep_plan.localCheckpoint)
+        f_cnt = submit(batch_df.count)
+        keep = f_keep.result()
+        removed[k] = f_cnt.result()
         return keep
 
     fun = _run_dedup_cascade(
         spark, sf, "ingest_e2e_state", ttl=None, prefilter=gate
     )
     z = F.lit(0).cast("long")
-    rem = _tiny_df(spark, removed, "batch_id int, arrived long")
+    rem = _tiny_df(spark, sorted(removed.items()), "batch_id int, arrived long")
     return (
         rem.join(
             fun.select(

@@ -10,6 +10,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
@@ -24,11 +26,17 @@ def test_emit_line_is_single_parseable_line():
         "queries_warm": {"a_key": 0.1},
         "requeued": ["b_key"],
         "note": "multi word string with unicode é and 'quotes'",
+        # a failed key's timing: strict JSON has no NaN/inf token
+        "queries_nonfinite": {"nan_key": float("nan"), "inf_key": float("inf")},
+        "canary": [1.0, float("-inf")],
     }
+    payload["queries"]["failed_key"] = float("nan")
     line = bench.emit_line(payload)
     assert "\n" not in line and "\r" not in line
-    parsed = json.loads(line)
-    assert parsed["queries"] == payload["queries"]
+    parsed = json.loads(line, parse_constant=lambda c: pytest.fail(c))
+    assert parsed["queries"] == {"a_key": 0.5, "b_key": 0.73, "failed_key": None}
+    assert parsed["queries_nonfinite"] == {"nan_key": None, "inf_key": None}
+    assert parsed["canary"] == [1.0, None]
     assert parsed["value"] == 1.23
 
 

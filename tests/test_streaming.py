@@ -679,8 +679,8 @@ def test_pipeline_ann_retrain_gate_rule(spark):
 
 def test_stream_ann_ingest_argmin_plan_no_exchange(spark):
     """Plan gate for the r12 zero-shuffle argmin (VERDICT r11 finding
-    1): the per-batch assignment relation — exactly the projection
-    foreachBatch builds before its localCheckpoint — must contain NO
+    1): the per-batch assignment relation — the engine's own
+    _ann_assign projection, which each batch checkpoints — must have NO
     Exchange: the old crossJoin(centroids) + row_number window
     shuffled batch×K expanded rows every batch; the prebuilt
     expression fold assigns per row."""
@@ -691,14 +691,7 @@ def test_stream_ann_ingest_argmin_plan_no_exchange(spark):
     emb = spark.read.parquet(SF_SMOKE + "/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    assigned = emb.select(
-        "vec_id", "embedding", F.expr(S._argmin_cell_sql(means)).alias("b")
-    ).select(
-        "vec_id",
-        "embedding",
-        F.col("b.cell").alias("cell"),
-        F.col("b.du").alias("du"),
-    )
+    assigned = S._ann_assign(emb, S._argmin_cell_sql(means))
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     # and it is not a degenerate plan: it really assigns every row
@@ -726,9 +719,12 @@ def test_cascade_compaction_and_dynfilter_result_invariance(spark):
 
     shipped = funnel()
     thr, cap = S._DC_COMPACT_FILES, S._DC_DYNFILTER_CAP
+    probe: list[dict] = []
     try:
         S._DC_COMPACT_FILES = 0  # compact every touched bucket, every batch
+        S._DC_READ_PROBE = probe  # the tools/cascade_scale.py read probe
         compacted = funnel()
+        S._DC_READ_PROBE = None
         tag = sf_tag(SF_SMOKE)
         base = pathlib.Path(scratch_dir(f"dedup_cascade_state/{tag}"))
         for store in ("hashes", "buckets"):
@@ -743,8 +739,15 @@ def test_cascade_compaction_and_dynfilter_result_invariance(spark):
     finally:
         S._DC_COMPACT_FILES = thr
         S._DC_DYNFILTER_CAP = cap
+        S._DC_READ_PROBE = None
     assert compacted == shipped
     assert unfiltered == shipped
+    # one probe record per committed batch, written after that batch's
+    # compaction; the pruned reads never scan more than the ledger holds
+    assert [p["batch"] for p in probe] == [r[0] for r in compacted]
+    for p in probe:
+        assert p["h_files_max"] == p["b_files_max"] == 1, p
+        assert p["h_scanned"] <= p["h_ledger"], p
 
 
 def test_compact_ledger_buckets_preserves_content(spark):
@@ -1340,6 +1343,79 @@ def test_clear_epoch_leftovers_removes_only_that_epoch(spark):
         str(d.relative_to(root)) for d in pathlib.Path(root).glob("*=*/epoch=*")
     )
     assert left == ["pb=0/epoch=-1", "pb=0/epoch=6"]
+
+
+def test_epoch_sink_commit_protocol(spark, tmp_path):
+    """_epoch_sink's redelivery contract, driven by calling its
+    foreachBatch callback by hand: (a) a delivery whose append lands and
+    then fails leaves no marker; (b) redelivering that epoch clears the
+    partial epoch dirs, appends exactly once, hands the body the same
+    batch index, and writes the marker only after every submitted
+    action finished; (c) a third delivery is a byte-identical no-op;
+    (d) an empty batch runs no body and uses up no batch index."""
+    import os
+    import time
+    import types
+
+    import engine.streaming as S
+
+    base, root = str(tmp_path), str(tmp_path / "store")
+    batch = spark.createDataFrame([(i, i % 2) for i in range(6)], "v long, p int")
+    calls: list[tuple[int, int]] = []  # (epoch_id, k) per body call
+    marker_at_append_end: list[bool] = []
+    followed: list[int] = []
+    fail = [True]
+
+    def body(batch_df, epoch_id, k, submit):
+        calls.append((epoch_id, k))
+        marker = S._epoch_marker(base, epoch_id)
+
+        def append():
+            time.sleep(0.5)  # still running when the body returns
+            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
+                "append"
+            ).partitionBy("p", "epoch").parquet(root)
+            marker_at_append_end.append(os.path.exists(marker))
+            if fail[0]:
+                raise RuntimeError("append job failed after its files landed")
+
+        submit(append)
+        return lambda: followed.append(int(os.path.exists(marker)))
+
+    deliver = S._epoch_sink(base, [root], body)(
+        types.SimpleNamespace(foreachBatch=lambda cb: cb)
+    )
+    marker5 = S._epoch_marker(base, 5)
+
+    # (a) the failed delivery: its files landed, the epoch stays unmarked
+    with pytest.raises(RuntimeError):
+        deliver(batch, 5)
+    assert not os.path.exists(marker5)
+    assert spark.read.parquet(root).count() == 6
+    assert followed == []
+
+    # (b) the redo: leftovers cleared, one append, same k, marker last
+    fail[0] = False
+    deliver(batch, 5)
+    assert calls == [(5, 0), (5, 0)]
+    assert os.path.exists(marker5)
+    assert marker_at_append_end == [False, False]
+    assert followed == [1]  # the follow-up runs after the commit
+    assert sorted(r["v"] for r in spark.read.parquet(root).collect()) == list(
+        range(6)
+    )
+
+    # (c) a committed epoch: no body call, tree byte-identical
+    before = _state_tree_hashes(base)
+    deliver(batch, 5)
+    assert _state_tree_hashes(base) == before
+    assert len(calls) == 2
+
+    # (d) an empty batch runs no body and leaves the next index at 1
+    deliver(batch.limit(0), 6)
+    assert len(calls) == 2
+    deliver(batch, 7)
+    assert calls[-1] == (7, 1)
 
 
 def test_ann_ingest_ttl_expiry_fires_and_bounds_store(spark):

@@ -17,6 +17,10 @@ from engine.registry import all_queries
 from engine.tablej import _PRIORITY_K, compaction_bins, frequent_pairs
 
 from .conftest import SF_SMOKE
+from .table_properties import (
+    assert_double_run_identical,
+    assert_partition_count_invariant,
+)
 
 QUERIES = all_queries()
 
@@ -190,25 +194,11 @@ _TABLEJ_KEYS = (
 
 
 def test_tablej_double_run_identical(spark):
-    for key in _TABLEJ_KEYS:
-        a = QUERIES[key](spark, SF_SMOKE).collect()
-        b = QUERIES[key](spark, SF_SMOKE).collect()
-        assert a == b, key
+    assert_double_run_identical(spark, _TABLEJ_KEYS)
 
 
 def test_tablej_partition_count_invariant(spark):
-    # a result that changes with spark.sql.shuffle.partitions would let
-    # driver-side config drift flip a value hash — run every Table J key
-    # at 8 and 32 shuffle partitions and require byte-identical output
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        at8 = {k: QUERIES[k](spark, SF_SMOKE).collect() for k in _TABLEJ_KEYS}
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        for k in _TABLEJ_KEYS:
-            assert QUERIES[k](spark, SF_SMOKE).collect() == at8[k], k
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert_partition_count_invariant(spark, _TABLEJ_KEYS)
 
 
 # --------------------------------------------------------------------------

@@ -18,6 +18,10 @@ from engine.registry import all_queries
 from engine.tablem import _HDR_M, _SHUF_SEED, _SHUF_SHARD
 
 from .conftest import SF_SMOKE
+from .table_properties import (
+    assert_double_run_identical,
+    assert_partition_count_invariant,
+)
 
 QUERIES = all_queries()
 
@@ -300,19 +304,8 @@ _TABLEM_KEYS = (
 
 
 def test_tablem_double_run_identical(spark):
-    for key in _TABLEM_KEYS:
-        a = QUERIES[key](spark, SF_SMOKE).collect()
-        b = QUERIES[key](spark, SF_SMOKE).collect()
-        assert a == b, key
+    assert_double_run_identical(spark, _TABLEM_KEYS)
 
 
 def test_tablem_partition_count_invariant(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        at8 = {k: QUERIES[k](spark, SF_SMOKE).collect() for k in _TABLEM_KEYS}
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        for k in _TABLEM_KEYS:
-            assert QUERIES[k](spark, SF_SMOKE).collect() == at8[k], k
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert_partition_count_invariant(spark, _TABLEM_KEYS)

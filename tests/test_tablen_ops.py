@@ -18,6 +18,10 @@ from engine.registry import all_queries
 from engine.tablen import _BIN_B, _FZ_TITLE, _HT_DIM, _SCALE_SAMPLE, _TE_M
 
 from .conftest import SF_SMOKE
+from .table_properties import (
+    assert_double_run_identical,
+    assert_partition_count_invariant,
+)
 
 QUERIES = all_queries()
 
@@ -233,19 +237,8 @@ _TABLEN_KEYS = (
 
 
 def test_tablen_double_run_identical(spark):
-    for key in _TABLEN_KEYS:
-        a = QUERIES[key](spark, SF_SMOKE).collect()
-        b = QUERIES[key](spark, SF_SMOKE).collect()
-        assert a == b, key
+    assert_double_run_identical(spark, _TABLEN_KEYS)
 
 
 def test_tablen_partition_count_invariant(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        at8 = {k: QUERIES[k](spark, SF_SMOKE).collect() for k in _TABLEN_KEYS}
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        for k in _TABLEN_KEYS:
-            assert QUERIES[k](spark, SF_SMOKE).collect() == at8[k], k
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert_partition_count_invariant(spark, _TABLEN_KEYS)

@@ -14,6 +14,10 @@ from engine.registry import all_queries
 from engine.tableo import _GEN_MOD, _GEN_MULT, _GEN_N, _GEN_PARTS, _DetGenSource
 
 from .conftest import SF_SMOKE
+from .table_properties import (
+    assert_double_run_identical,
+    assert_partition_count_invariant,
+)
 
 QUERIES = all_queries()
 
@@ -185,22 +189,11 @@ _TABLEO_KEYS = (
 
 
 def test_tableo_double_run_identical(spark):
-    for key in _TABLEO_KEYS:
-        a = QUERIES[key](spark, SF_SMOKE).collect()
-        b = QUERIES[key](spark, SF_SMOKE).collect()
-        assert a == b, key
+    assert_double_run_identical(spark, _TABLEO_KEYS)
 
 
 def test_tableo_partition_count_invariant(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        at8 = {k: QUERIES[k](spark, SF_SMOKE).collect() for k in _TABLEO_KEYS}
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        for k in _TABLEO_KEYS:
-            assert QUERIES[k](spark, SF_SMOKE).collect() == at8[k], k
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert_partition_count_invariant(spark, _TABLEO_KEYS)
 
 
 # -- agg_spearman_rank -------------------------------------------------------

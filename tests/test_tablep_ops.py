@@ -19,6 +19,10 @@ from pyspark.sql import functions as F
 from engine.registry import all_queries
 
 from .conftest import SF_SMOKE
+from .table_properties import (
+    assert_double_run_identical,
+    assert_partition_count_invariant,
+)
 
 QUERIES = all_queries()
 
@@ -285,19 +289,8 @@ _TABLEP_KEYS = (
 
 
 def test_tablep_double_run_identical(spark):
-    for key in _TABLEP_KEYS:
-        a = QUERIES[key](spark, SF_SMOKE).collect()
-        b = QUERIES[key](spark, SF_SMOKE).collect()
-        assert a == b, key
+    assert_double_run_identical(spark, _TABLEP_KEYS)
 
 
 def test_tablep_partition_count_invariant(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        at8 = {k: QUERIES[k](spark, SF_SMOKE).collect() for k in _TABLEP_KEYS}
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        for k in _TABLEP_KEYS:
-            assert QUERIES[k](spark, SF_SMOKE).collect() == at8[k], k
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert_partition_count_invariant(spark, _TABLEP_KEYS)

@@ -10,7 +10,10 @@ import math
 
 from engine.registry import all_queries
 
-from .conftest import SF_SMOKE
+from .table_properties import (
+    assert_double_run_identical,
+    assert_partition_count_invariant,
+)
 
 QUERIES = all_queries()
 
@@ -200,19 +203,8 @@ _TABLER_KEYS = (
 
 
 def test_tabler_double_run_identical(spark):
-    for key in _TABLER_KEYS:
-        a = QUERIES[key](spark, SF_SMOKE).collect()
-        b = QUERIES[key](spark, SF_SMOKE).collect()
-        assert a == b, key
+    assert_double_run_identical(spark, _TABLER_KEYS)
 
 
 def test_tabler_partition_count_invariant(spark):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        at8 = {k: QUERIES[k](spark, SF_SMOKE).collect() for k in _TABLER_KEYS}
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        for k in _TABLER_KEYS:
-            assert QUERIES[k](spark, SF_SMOKE).collect() == at8[k], k
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert_partition_count_invariant(spark, _TABLER_KEYS)
