@@ -1112,27 +1112,6 @@ def affinity_edges(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _pagerank_ranks9_path(sf: str) -> str:
-    """Per-sf ranks9 materialization path, fingerprinted on the SOURCE
-    events parquet (mtime+size — engine.session.data_fingerprint): after
-    a testdata regeneration the oracle's path simply won't exist until
-    the Spark side re-runs, so a stale iteration-9 vector can never be
-    silently compared (ADVICE r3; same contract as the IVF corpus memo)."""
-    from engine.session import data_fingerprint, scratch_dir
-
-    tag = sf_tag(sf)
-    return scratch_dir("pagerank") + (
-        f"/ranks9_{tag}_{data_fingerprint(sf, 'events')}"
-    )
-
-
-#: induction-step oracle (the kmeans materialized-relation contract,
-#: applied to an iterative float fixpoint): the Spark query materializes
-#: its iteration-9 rank vector; the oracle REBUILDS the cohort-ring
-#: edge list from events in pure SQL and applies ONE power-iteration
-#: step to those ranks. Matching top-20 proves both the graph
-#: construction and the update operator — the induction step that, with
-#: the shared uniform init, pins the whole 10-round computation.
 #: cohort-ring edge list as a reusable SQL CTE fragment (expects an
 #: ``e`` CTE binding the canonical events relation before it) — single
 #: source of truth for every oracle over the affinity graph
@@ -1160,41 +1139,46 @@ AFFINITY_EDGES_CTE = """
     )
 """
 
+#: the whole 10-round computation in SQL: rebuild the cohort-ring graph
+#: from events, start from the uniform 1/n and unroll every power-
+#: iteration round as one contributions/ranks CTE pair — the same update
+#: both Spark paths apply (multigraph edges each contribute; a dst that
+#: is never a src is not a node and its mass is dropped)
 _PAGERANK_SQL = (
-    """
-    WITH e AS ({events}),
+    f"""
+    WITH e AS ({EVENTS_US_SQL}),
 """
     + AFFINITY_EDGES_CTE
     + """,
     deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
     nodes AS (SELECT DISTINCT src AS user_id FROM edges),
     nn AS (SELECT COUNT(*) AS n FROM nodes),
-    r9 AS (SELECT user_id, rank FROM read_parquet('{ranks9}/*.parquet')),
-    contribs AS (
+    r0 AS (SELECT user_id, 1.0 / nn.n AS rank FROM nodes CROSS JOIN nn)"""
+    + "".join(
+        f""",
+    c{i} AS (
       SELECT ed.dst, SUM(r.rank / d.deg) AS contrib
       FROM edges ed
       JOIN deg d ON ed.src = d.src
-      JOIN r9 r ON ed.src = r.user_id
+      JOIN r{i - 1} r ON ed.src = r.user_id
       GROUP BY ed.dst
+    ),
+    r{i} AS (
+      SELECT n.user_id, 0.15 / nn.n + 0.85 * COALESCE(c.contrib, 0.0) AS rank
+      FROM nodes n CROSS JOIN nn
+      LEFT JOIN c{i} c ON n.user_id = c.dst
+    )"""
+        for i in range(1, 11)
     )
-    SELECT n.user_id,
-           ROUND((0.15 / nn.n + 0.85 * COALESCE(c.contrib, 0.0)) * 1e6)
-             AS rank_ppm
-    FROM nodes n CROSS JOIN nn
-    LEFT JOIN contribs c ON n.user_id = c.dst
-    ORDER BY rank_ppm DESC, n.user_id LIMIT 20
+    + """
+    SELECT user_id, ROUND(rank * 1e6) AS rank_ppm
+    FROM r10
+    ORDER BY rank_ppm DESC, user_id LIMIT 20
 """
 )
 
 
-def _pagerank_oracle_sql() -> str:
-    return _PAGERANK_SQL.format(
-        events=EVENTS_US_SQL,
-        ranks9=_pagerank_ranks9_path("/root/testdata/sf0.01"),
-    )
-
-
-@register("graph_pagerank", sql=_pagerank_oracle_sql)
+@register("graph_pagerank", sql=_PAGERANK_SQL)
 def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """Damped PageRank (d=0.85, 10 iterations) over a user-affinity
     graph derived from events: within each (event_type, day) cohort,
@@ -1222,9 +1206,9 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     edges = scratch_cache(materialize_affinity_edges(spark, sf))
     n_edges = edges.count()
     if n_edges <= _PAGERANK_DRIVER_EDGES:
-        ranks = _pagerank_driver(spark, sf, edges)
+        ranks = _pagerank_driver(spark, edges)
     else:
-        ranks = _pagerank_distributed(spark, sf, edges)
+        ranks = _pagerank_distributed(spark, edges)
     return (
         ranks.select("user_id", dround(F.col("rank") * 1e6, 0).alias("rank_ppm"))
         .orderBy(F.col("rank_ppm").desc(), "user_id")
@@ -1243,7 +1227,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 _PAGERANK_DRIVER_EDGES = 2_000_000
 
 
-def _pagerank_driver(spark: SparkSession, sf: str, edges: DataFrame) -> DataFrame:
+def _pagerank_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """numpy power iteration over the collected edge list (multigraph:
     duplicate (src,dst) rows each carry their own contribution, exactly
     like the row-per-edge distributed aggregation). np.add.at applies
@@ -1265,9 +1249,7 @@ def _pagerank_driver(spark: SparkSession, sf: str, edges: DataFrame) -> DataFram
     ok = (pos < n) & (node_ids[np.minimum(pos, n - 1)] == dst)
     dok = pos[ok]
     r = np.full(n, 1.0 / n)
-    for i in range(10):
-        if i == 9:
-            _write_ranks9(spark, sf, node_ids, r)
+    for _ in range(10):
         w = r[sidx] / deg[sidx]
         contrib = np.zeros(n)
         np.add.at(contrib, dok, w[ok])
@@ -1277,18 +1259,7 @@ def _pagerank_driver(spark: SparkSession, sf: str, edges: DataFrame) -> DataFram
     )
 
 
-def _write_ranks9(spark: SparkSession, sf: str, node_ids, r) -> None:
-    """Persist the iteration-9 vector the oracle replays one step from."""
-    import pandas as pd
-
-    spark.createDataFrame(
-        pd.DataFrame({"user_id": node_ids, "rank": r})
-    ).coalesce(1).write.mode("overwrite").parquet(_pagerank_ranks9_path(sf))
-
-
-def _pagerank_distributed(
-    spark: SparkSession, sf: str, edges: DataFrame
-) -> DataFrame:
+def _pagerank_distributed(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """The cluster-scale fixpoint: per iteration ONE join (ranks onto
     degree-annotated edges, partitioned on src) + ONE aggregation
     (contributions by dst) — the driver loop carries only the iteration
@@ -1309,11 +1280,7 @@ def _pagerank_distributed(
     spark.conf.set("spark.sql.shuffle.partitions", str(target))
     try:
         ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-        for i in range(10):
-            if i == 9:
-                # persist the iteration-9 vector the oracle replays one
-                # step from (checkpointed → this is a cheap local write)
-                ranks.write.mode("overwrite").parquet(_pagerank_ranks9_path(sf))
+        for _ in range(10):
             contribs = (
                 edges_deg.join(ranks, edges_deg.src == ranks.user_id)
                 .select("dst", (F.col("rank") / F.col("deg")).alias("c"))

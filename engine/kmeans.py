@@ -163,7 +163,10 @@ def materialize_means(spark: SparkSession, sf: str) -> tuple[str, list[list[floa
     the identical probe in SQL (read means → rank cells per query →
     scan probed cells), value-checking the whole ANN path. The means
     come from the fit cache when it holds them, else from the K rows of
-    the published artifact (parquet round-trips doubles exactly)."""
+    the published artifact, read with pyarrow so a fresh process runs no
+    Spark job for them (parquet round-trips doubles exactly; pyarrow
+    skips the ``_``-prefixed marker)."""
+    import pyarrow.parquet as pq
 
     def build(tmp: str) -> None:
         _assigned, means, _it = run_kmeans(spark, sf)
@@ -177,8 +180,8 @@ def materialize_means(spark: SparkSession, sf: str) -> tuple[str, list[list[floa
     memo = (sf, data_fingerprint(sf, "embeddings"))
     if memo in _MEANS_CACHE:
         return path, _MEANS_CACHE[memo][0]
-    rows = spark.read.parquet(path).collect()  # K rows — the model
-    return path, [list(r["mean"]) for r in sorted(rows, key=lambda r: r["cluster"])]
+    rows = pq.read_table(path).sort_by("cluster")  # K rows — the model
+    return path, rows.column("mean").to_pylist()
 
 
 def _so_kmeans_sql() -> str:

@@ -23,8 +23,8 @@ QUERIES: dict[str, QueryFn] = {}
 #: returning it. Callables resolve at all_oracles() CALL time, not at
 #: decoration (import) time: oracle builders that embed artifact paths
 #: fingerprinted on the source tables (streaming replay slices, the
-#: pagerank ranks9 cache, ...) must see the fingerprint of the data as
-#: it is when the driver runs, or a testdata regeneration inside a
+#: k-means means and assignments, ...) must see the fingerprint of the
+#: data as it is at call time, or a testdata regeneration inside a
 #: long-lived process serves a stale path (ADVICE r7).
 ORACLES: dict[str, str | Callable[[], str]] = {}
 

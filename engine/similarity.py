@@ -15,6 +15,8 @@ Scale design notes (the point of this module at 100 TB):
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,8 +28,15 @@ from engine.session import (
     artifact_path,
     oracle_sf,
     scratch_cache,
-    sf_tag,
     tiny_df,
+)
+
+#: DuckDB left-fold dot product over 1-based lists of length d: both
+#: engines then add in identical order (F.aggregate is a left fold;
+#: list_sum's summation order is not contractually one)
+_DOT = (
+    "list_reduce(list_transform(generate_series(1, {d}), "
+    "i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
 )
 
 # --------------------------------------------------------------------------
@@ -554,6 +563,19 @@ def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
 
 
+def _l2_norm(emb: DataFrame) -> DataFrame:
+    """L2-normalize the embedding column → (vec_id, en: array<double>),
+    summing in left-fold order like the oracles' _DOT."""
+    return (
+        emb.select("vec_id", _as_double("embedding").alias("e"))
+        .withColumn(
+            "nrm",
+            F.expr("sqrt(aggregate(transform(e, y -> y * y), 0D, (a, v) -> a + v))"),
+        )
+        .select("vec_id", F.expr("transform(e, x -> x / nrm)").alias("en"))
+    )
+
+
 def _cosine(a: Column, b: Column) -> Column:
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
@@ -611,42 +633,59 @@ def sim_cosine_topk_exact(spark: SparkSession, sf: str) -> DataFrame:
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 5)
 
 
-def _lsh_cand_path(sf_tag: str) -> str:
-    """Per-scale-factor LSH candidate-pair materialization (the
-    so_kmeans_ml / IVF assignments contract: the ml library's seeded
-    bucketing stays library-internal, the candidate SET it produced is
-    pinned to parquet, and every downstream number is value-checked
-    from that artifact). The oracle contract runs at sf0.01, so the
-    oracle SQL pins that tag; the Spark query must run before the
-    oracle in the same filesystem (it writes the parquet the oracle
-    reads)."""
-    from engine.session import scratch_dir
+#: adaptive-width reference occupancy: bucketLength shrinks past this
+#: corpus size so expected bucket width stays ~constant (see docstring)
+_LSH_TARGET_OCC = 2048
+#: hard per-bucket split backstop for skewed corpora the width rule
+#: can't fix (many near-identical vectors piling into one bucket)
+_LSH_BUCKET_TARGET = 2048
+#: random projections: 4 hash tables × 64 dims of ±1 signs, sign [t][d]
+#: from md5('lsh:<t>:<d>') — the sim_srp_hamming_topk hyperplane rule.
+#: Each row / 8 is a unit vector; multiplying by ±1 and dividing by 8
+#: are exact, so both engines compute every bucket key bit-identically
+_LSH_SIGNS = [
+    [-1 if int(hashlib.md5(f"lsh:{t}:{d}".encode()).hexdigest()[0], 16) % 2 else 1
+     for d in range(64)]
+    for t in range(4)
+]
 
-    return scratch_dir("lsh_topk") + f"/cand_{sf_tag}"
-
-
-#: left-fold dot product so both engines sum in identical order (the
-#: same fragment the PQ key uses — _PQ_DOT below; duplicated here
-#: because this SQL is built at module top before that section loads)
-_LSH_DOT = (
-    "list_reduce(list_transform(generate_series(1, {d}), "
-    "i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
-)
-
+#: candidates rebuilt from the projection's definition: every (query,
+#: neighbor) sharing a (table, bucket) key, queries probing hkey±1 when
+#: the width has narrowed below 0.5. The hot-bucket split is left out:
+#: s = ceil(count/_LSH_BUCKET_TARGET) is 1 for every bucket whenever
+#: N <= _LSH_BUCKET_TARGET (the embeddings hold 500/500/2000 rows at
+#: the test SFs), and DuckDB has no xxhash64 to reproduce a split.
 _TOPK_LSH_SQL = f"""
-    WITH cand AS (
-      SELECT query_id, neighbor_id FROM read_parquet('{{cand}}/*.parquet')
-    ),
-    base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
     nrm AS (
       SELECT vec_id,
              list_transform(e, x -> x / sqrt(
-               {_LSH_DOT.format(d=64, a="e", b="e")})) AS en
+               {_DOT.format(d=64, a="e", b="e")})) AS en
       FROM base
+    ),
+    sgn AS (
+      SELECT t AS tbl, list(CASE WHEN ('0x' || md5(concat('lsh:', t, ':', d))[1])
+                                 ::INTEGER % 2 = 0 THEN 1 ELSE -1 END ORDER BY d) AS sgn
+      FROM range(4) a(t), range(64) b(d) GROUP BY t
+    ),
+    wid AS (SELECT 0.5 * LEAST(1.0, {_LSH_TARGET_OCC} / COUNT(*)::DOUBLE) AS w
+            FROM embeddings),
+    hashed AS (
+      SELECT n.vec_id, s.tbl,
+             CAST(floor({_DOT.format(d=64, a="n.en", b="s.sgn")} / 8 / wid.w)
+                  AS BIGINT) AS hkey
+      FROM nrm n, sgn s, wid
+    ),
+    probe AS (SELECT UNNEST(IF(w < 0.5, [-1, 0, 1], [0])) AS off FROM wid),
+    cand AS (
+      SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+      FROM hashed q, probe p, hashed c
+      WHERE q.vec_id < 5 AND c.tbl = q.tbl AND c.hkey = q.hkey + p.off
+        AND c.vec_id <> q.vec_id
     ),
     scored AS (
       SELECT c.query_id, c.neighbor_id,
-             ROUND({_LSH_DOT.format(d=64, a="q.en", b="n.en")} * 1e6) / 1e6
+             ROUND({_DOT.format(d=64, a="q.en", b="n.en")} * 1e6) / 1e6
                AS cos
       FROM cand c
       JOIN nrm q ON q.vec_id = c.query_id
@@ -660,17 +699,80 @@ _TOPK_LSH_SQL = f"""
 """
 
 
-#: adaptive-width reference occupancy: bucketLength shrinks past this
-#: corpus size so expected bucket width stays ~constant (see docstring)
-_LSH_TARGET_OCC = 2048
-#: hard per-bucket split backstop for skewed corpora the width rule
-#: can't fix (many near-identical vectors piling into one bucket)
-_LSH_BUCKET_TARGET = 2048
+def _lsh_pairs(spark: SparkSession, sf: str, unit: DataFrame) -> DataFrame:
+    """Distinct (query_id, neighbor_id) candidates of the 5 queries:
+    bucket key floor(<en, sgn_t> / 8 / w) per table t, hot buckets split
+    on pmod(xxhash64(vec_id, tbl), s), query-side hkey±1 probes when the
+    width has narrowed (see sim_cosine_topk_lsh)."""
+    from engine.session import table_rows
+
+    # footer-metadata count (~ms, memoized) — the width rule only needs
+    # N, so don't pay a full Spark count job on the hot path; falls
+    # back to the real count if any footer is unreadable (table_rows
+    # never returns a partial sum)
+    n = max(1, table_rows(sf, "embeddings") or T(spark, sf, "embeddings").count())
+    w = 0.5 * min(1.0, _LSH_TARGET_OCC / n)
+    hkeys = F.transform(
+        F.lit(_LSH_SIGNS),
+        lambda sgn: F.floor(
+            F.aggregate(
+                F.zip_with("en", sgn, lambda x, y: x * y),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+            / 8
+            / F.lit(w)
+        ),
+    )
+    # cached: re-read by sizes, corp AND qh — without it the plan runs
+    # the corpus-wide transform+posexplode 3-4x per invocation
+    hashed = scratch_cache(
+        unit.select("vec_id", F.posexplode(hkeys).alias("tbl", "hkey"))
+    )
+    sizes = hashed.groupBy("tbl", "hkey").agg(
+        F.greatest(
+            F.lit(1).cast("long"),
+            F.ceil(F.count(F.lit(1)) / F.lit(float(_LSH_BUCKET_TARGET))),
+        ).alias("s")
+    )
+    corp = hashed.join(sizes, ["tbl", "hkey"]).withColumn(
+        "sub", F.pmod(F.xxhash64("vec_id", "tbl"), F.col("s"))
+    )
+    # multi-probe (Lv et al., VLDB'07): when the width rule has narrowed
+    # the buckets, a true neighbor's projection often lands one bucket
+    # over — probe hkey±1 on the QUERY side only (corpus hashed once).
+    # Engages iff adaptive width engages. The inner join against
+    # `sizes` drops probes into empty buckets before any pair work.
+    probe_offs = [0] if w >= 0.5 else [-1, 0, 1]
+    qh = (
+        hashed.filter(F.col("vec_id") < 5)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            "tbl",
+            F.explode(F.array(*[F.lit(o) for o in probe_offs])).alias("off"),
+            "hkey",
+        )
+        .withColumn("hkey", F.col("hkey") + F.col("off"))
+        .join(sizes, ["tbl", "hkey"])
+        .withColumn("sub", F.pmod(F.xxhash64("query_id", "tbl"), F.col("s")))
+        .select("query_id", "tbl", "hkey", "sub")
+    )
+    return (
+        qh.join(
+            corp.select(
+                F.col("vec_id").alias("neighbor_id"), "tbl", "hkey", "sub"
+            ),
+            ["tbl", "hkey", "sub"],
+        )
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
 
 
-@register("sim_cosine_topk_lsh", sql=_TOPK_LSH_SQL.format(cand=_lsh_cand_path("sf0_01")))
+@register("sim_cosine_topk_lsh", sql=_TOPK_LSH_SQL)
 def sim_cosine_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """Approximate top-5 via BucketedRandomProjectionLSH (euclidean on
+    """Approximate top-5 via random-projection LSH (euclidean buckets on
     L2-normalized vectors ≈ cosine): the 100-TB path — candidates come
     from matching hash buckets only. Recall vs the exact variant is
     property-tested (≥ 0.8, SURVEY.md §5.2).
@@ -679,7 +781,7 @@ def sim_cosine_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     occupancy grow linearly with the corpus — measured r9: w=0.5 put
     ~N/2 vectors in every one of ~2 buckets/table (sf1x: 10k-wide
     buckets, 5.2× wall at 10× data). Two controls, both inert at the
-    oracle contract SFs (verified pair-set-identical to the r9 code):
+    oracle contract SFs:
     (a) ADAPTIVE WIDTH — w = 0.5·min(1, _LSH_TARGET_OCC/N), so past
         2048 vectors buckets narrow with the corpus and expected
         occupancy stays ~constant. Narrow buckets prune by GEOMETRY
@@ -697,97 +799,23 @@ def sim_cosine_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
         approximation when a bucket is hot (the knn precedent);
         split == 1 everywhere at the contract SFs.
     Candidate generation is an explicit transform→explode→equi-join on
-    (table, hash-bucket[, sub]) — replaces ml's approxSimilarityJoin so
-    the bucket relation is splittable; the distance-threshold filter it
-    applied (d < 2.0) is vacuous on unit vectors (only exact antipodes
-    reach 2.0) and is dropped.
+    (table, hash-bucket[, sub]) (_lsh_pairs), so the bucket relation is
+    splittable; no distance-threshold filter is applied (d < 2.0 is
+    vacuous on unit vectors — only exact antipodes reach 2.0).
 
-    FULL value oracle since r7 (was the last rows-only analytics key):
-    the seeded ml bucketing stays library-internal, but the candidate
-    PAIR SET it produces is materialized to parquet and the top-5 is
-    recomputed from RAW embeddings with the exact key's integer-
-    quantized cosine — the oracle reads the same candidate artifact and
-    must reproduce every (query, neighbor, cos, rank) row bit-for-bit
-    (the so_kmeans_ml materialized-assignments contract)."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    from engine.session import scratch_cache, table_rows
-
-    emb = T(spark, sf, "embeddings")
-    # footer-metadata count (~ms, memoized) — the width rule only needs
-    # N, so don't pay a full Spark count job on the hot path; falls
-    # back to the real count if any footer is unreadable (table_rows
-    # never returns a partial sum)
-    n = max(1, table_rows(sf, "embeddings") or emb.count())
-    w = 0.5 * min(1.0, _LSH_TARGET_OCC / n)
-    to_vec = array_to_vector
-    base = emb.select("vec_id", to_vec(_as_double("embedding")).alias("raw"))
-    norm = Normalizer(inputCol="raw", outputCol="v", p=2.0).transform(base)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="v", outputCol="h", bucketLength=w, numHashTables=4, seed=42
-    )
-    model = lsh.fit(norm)
-    # cached: re-read by sizes, corp AND qh — without it the plan runs
-    # the corpus-wide transform+posexplode 3-4x per invocation
-    hashed = scratch_cache(
-        model.transform(norm)
-        .select("vec_id", F.posexplode("h").alias("tbl", "hv"))
-        .select("vec_id", "tbl", vector_to_array("hv").getItem(0).alias("hkey"))
-    )
-    sizes = hashed.groupBy("tbl", "hkey").agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.ceil(F.count(F.lit(1)) / F.lit(float(_LSH_BUCKET_TARGET))),
-        ).alias("s")
-    )
-    corp = hashed.join(sizes, ["tbl", "hkey"]).withColumn(
-        "sub", F.pmod(F.xxhash64("vec_id", "tbl"), F.col("s"))
-    )
-    # multi-probe (Lv et al., VLDB'07): when the width rule has narrowed
-    # the buckets, a true neighbor's projection often lands one bucket
-    # over — probe hkey±1 on the QUERY side only (corpus hashed once).
-    # Engages iff adaptive width engages, so the contract-SF pair sets
-    # are bit-identical to the fixed-width code. The inner join against
-    # `sizes` drops probes into empty buckets before any pair work.
-    probe_offs = [0] if w >= 0.5 else [-1, 0, 1]
-    qh = (
-        hashed.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "tbl",
-            F.explode(F.array(*[F.lit(o) for o in probe_offs])).alias("off"),
-            "hkey",
-        )
-        .withColumn("hkey", F.col("hkey") + F.col("off"))
-        .join(sizes, ["tbl", "hkey"])
-        .withColumn("sub", F.pmod(F.xxhash64("query_id", "tbl"), F.col("s")))
-        .select("query_id", "tbl", "hkey", "sub")
-    )
-    tag = sf_tag(sf)
-    pairs = (
-        qh.join(
-            corp.select(
-                F.col("vec_id").alias("neighbor_id"), "tbl", "hkey", "sub"
-            ),
-            ["tbl", "hkey", "sub"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    pairs.write.mode("overwrite").parquet(_lsh_cand_path(tag))
-    pinned = spark.read.parquet(_lsh_cand_path(tag))
-    nrm = emb.select(
-        "vec_id", _as_double("embedding").alias("e")
-    ).withColumn(
-        "nrm",
-        F.expr("sqrt(aggregate(transform(e, y -> y * y), 0D, (a, v) -> a + v))"),
-    ).select("vec_id", F.expr("transform(e, x -> x / nrm)").alias("en"))
-    qn = nrm.select(F.col("vec_id").alias("query_id"), F.col("en").alias("qe"))
-    cn = nrm.select(F.col("vec_id").alias("neighbor_id"), F.col("en").alias("ce"))
+    FULL value oracle over the whole computation: the projections are
+    hash-derived (_LSH_SIGNS, sign [t][d] from md5('lsh:<t>:<d>')) and
+    the bucket key is a left-fold dot product over ±1 signs, so DuckDB
+    regenerates every bucket key bit-for-bit from the raw embeddings,
+    rebuilds the candidate set itself (width, probes) and must
+    reproduce every (query, neighbor, cos, rank) row with the exact
+    key's integer-quantized cosine."""
+    unit = _l2_norm(T(spark, sf, "embeddings"))
+    pairs = _lsh_pairs(spark, sf, unit)
+    qn = unit.select(F.col("vec_id").alias("query_id"), F.col("en").alias("qe"))
+    cn = unit.select(F.col("vec_id").alias("neighbor_id"), F.col("en").alias("ce"))
     scored = (
-        pinned.join(F.broadcast(qn), "query_id")
+        pairs.join(F.broadcast(qn), "query_id")
         .join(cn, "neighbor_id")
         .select(
             "query_id",
@@ -1980,13 +2008,7 @@ _IVF_PQ_NPROBE = 5
 #: fixture-tuned.
 _PQ_RERANK = 100
 
-#: DuckDB fragments shared across the oracle: left-fold sums so both
-#: engines add in identical order (list_sum's summation order is not
-#: contractually the left fold F.aggregate performs)
-_PQ_DOT = (
-    "list_reduce(list_transform(generate_series(1, {d}), "
-    "i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
-)
+#: left-fold squared distance, the _DOT sibling for the PQ oracles
 _PQ_D2 = (
     "list_reduce(list_transform(generate_series(1, {d}), "
     "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
@@ -1999,7 +2021,7 @@ _PQ_SQL = f"""
     nrm AS (
       SELECT vec_id,
              list_transform(e, x -> x / sqrt(
-               {_PQ_DOT.format(d=64, a="e", b="e")})) AS en
+               {_DOT.format(d=64, a="e", b="e")})) AS en
       FROM base
     ),
     cb AS (
@@ -2033,7 +2055,7 @@ _PQ_SQL = f"""
     ),
     adc AS (
       SELECT q.query_id, e.vec_id AS neighbor_id,
-             SUM(CAST(ROUND({_PQ_DOT.format(d=_PQ_D, a="q.qsub", b="e.csub")}
+             SUM(CAST(ROUND({_DOT.format(d=_PQ_D, a="q.qsub", b="e.csub")}
                    * 1e6) AS BIGINT)) / 1e6 AS adc
       FROM enc e JOIN q_sub q ON q.s = e.s
       WHERE e.vec_id != q.query_id
@@ -2049,7 +2071,7 @@ _PQ_SQL = f"""
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                 ROUND({_PQ_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
+                 ROUND({_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
                    DESC, c.vec_id) AS rnk
         FROM (SELECT * FROM nrm WHERE vec_id < {_PQ_TOPK}) q
         JOIN nrm c ON c.vec_id != q.vec_id)
@@ -2078,21 +2100,9 @@ def _pq_encode(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     distances evaluate inside a single projection, and the argmin is an
     array_sort on (quantized d2, cid) structs — no shuffle, no argmin
     window."""
-    norm = _pq_norm(emb)
+    norm = _l2_norm(emb)
     corpus_sub, enc = _pq_subspace_encode(norm, "en")
     return norm, corpus_sub, enc
-
-
-def _pq_norm(emb: DataFrame) -> DataFrame:
-    """L2-normalize the embedding column → (vec_id, en: array<double>)."""
-    return (
-        emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn(
-            "nrm",
-            F.expr("sqrt(aggregate(transform(e, y -> y * y), 0D, (a, v) -> a + v))"),
-        )
-        .select("vec_id", F.expr("transform(e, x -> x / nrm)").alias("en"))
-    )
 
 
 def _pq_subs(vecs: DataFrame, vcol: str) -> DataFrame:
@@ -2351,7 +2361,7 @@ _IVF_PQ_SQL = f"""
     nrm AS (
       SELECT vec_id,
              list_transform(e, x -> x / sqrt(
-               {_PQ_DOT.format(d=64, a="e", b="e")})) AS en
+               {_DOT.format(d=64, a="e", b="e")})) AS en
       FROM base
     ),
     asg AS (SELECT vec_id, cluster FROM read_parquet('{{assign}}/*.parquet')),
@@ -2418,13 +2428,13 @@ _IVF_PQ_SQL = f"""
     ),
     qc AS (
       SELECT n.vec_id AS query_id, c.cell,
-             CAST(ROUND({_PQ_DOT.format(d=64, a="n.en", b="c.cm")}
+             CAST(ROUND({_DOT.format(d=64, a="n.en", b="c.cm")}
                    * 1e6) AS BIGINT) AS t1
       FROM nrm n CROSS JOIN cmean c WHERE n.vec_id < {_PQ_TOPK}
     ),
     adc AS (
       SELECT q.query_id, e.vec_id AS neighbor_id,
-             (SUM(CAST(ROUND({_PQ_DOT.format(d=_PQ_D, a="q.qsub", b="e.csub")}
+             (SUM(CAST(ROUND({_DOT.format(d=_PQ_D, a="q.qsub", b="e.csub")}
                    * 1e6) AS BIGINT)) + ANY_VALUE(qc.t1)) / 1e6 AS adc
       FROM enc e
       JOIN asg a ON a.vec_id = e.vec_id
@@ -2444,10 +2454,10 @@ _IVF_PQ_SQL = f"""
     ),
     refined AS (
       SELECT s.query_id, s.neighbor_id, s.adc,
-             ROUND({_PQ_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
+             ROUND({_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
                AS cos,
              ROW_NUMBER() OVER (PARTITION BY s.query_id ORDER BY
-               ROUND({_PQ_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
+               ROUND({_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
                  DESC, s.neighbor_id) AS rnk
       FROM shortl s
       JOIN nrm q ON q.vec_id = s.query_id
@@ -2457,7 +2467,7 @@ _IVF_PQ_SQL = f"""
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                 ROUND({_PQ_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
+                 ROUND({_DOT.format(d=64, a="q.en", b="c.en")} * 1e6) / 1e6
                    DESC, c.vec_id) AS rnk
         FROM (SELECT * FROM nrm WHERE vec_id < {_PQ_TOPK}) q
         JOIN nrm c ON c.vec_id != q.vec_id)
@@ -2535,7 +2545,7 @@ def materialize_pq_codes(spark: SparkSession, sf: str) -> str:
             "vec_id", F.col("cluster").alias("cell")
         )
         # conditional fan-out of the full-corpus encode (see reencode_cells)
-        norm = parallelize_scan(_pq_norm(emb), scan_units(sf, "embeddings"))
+        norm = parallelize_scan(_l2_norm(emb), scan_units(sf, "embeddings"))
         cmeans = _pq_cell_means(norm, assigned)
         cmeans.write.mode("overwrite").parquet(tmp + "/cmeans")
         cmeans = spark.read.parquet(tmp + "/cmeans")
@@ -2635,7 +2645,7 @@ def reencode_cells(spark: SparkSession, sf: str, cells: list[int]) -> str:
         # argmin with cid tie-break.
         from engine.session import parallelize_scan, scan_units
 
-        norm = parallelize_scan(_pq_norm(emb), scan_units(sf, "embeddings"))
+        norm = parallelize_scan(_l2_norm(emb), scan_units(sf, "embeddings"))
         # the new flagged-cell means are computed ONCE and pinned
         # (localCheckpoint) so the codes' residuals consume the same rows
         # the published cmeans relation carries — without the former
@@ -2682,7 +2692,6 @@ def _tree_token(root: str) -> str:
     instead of serving byte-stale copies — whenever the source was
     physically rewritten (the byte-carry contract the physical-pin
     tests assert)."""
-    import hashlib
     import pathlib
 
     h = hashlib.sha1()
@@ -2770,7 +2779,7 @@ def reindex_cells(
             from engine.session import parallelize_scan, scan_units
 
             norm = parallelize_scan(
-                _pq_norm(T(spark, sf, "embeddings")), scan_units(sf, "embeddings")
+                _l2_norm(T(spark, sf, "embeddings")), scan_units(sf, "embeddings")
             )
             cmn = spark.read.parquet(src + "/cmeans")
             resid = _pq_residuals(norm, new_assigned, cmn)

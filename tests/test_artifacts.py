@@ -110,6 +110,23 @@ def test_hash_mode_separates_pq_codes_roots(spark, monkeypatch):
     assert os.path.isdir(fast) and os.path.isdir(portable)
 
 
+def test_warm_means_artifact_runs_no_spark_job(spark, monkeypatch, tmp_path):
+    """A fresh process finds the k-means centroids published but its fit
+    cache empty: materialize_means must read the K rows off disk without
+    a Spark job and return the fitted means exactly."""
+    import engine.kmeans as K
+
+    monkeypatch.setattr(K, "_means_path", lambda sf: str(tmp_path / "means"))
+    _assigned, fitted, _it = K.run_kmeans(spark, SF_SMOKE)
+    K.materialize_means(spark, SF_SMOKE)  # publishes from the fit cache
+    monkeypatch.setattr(K, "_MEANS_CACHE", {})
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = dag.nextJobId()
+    _path, means = K.materialize_means(spark, SF_SMOKE)
+    assert dag.nextJobId() - jobs0 == 0
+    assert means == fitted
+
+
 def test_gapped_codebook_raises():
     from engine.similarity import _PQ_S, _check_codebook
 

@@ -107,76 +107,71 @@ def test_lsh_bucket_split_and_multiprobe(spark, monkeypatch):
     constants patched so BOTH engage at SF_SMOKE — adaptive width
     (w = 0.5·min(1, occ/N) < 0.5 → query-side multi-probe hkey±1) and
     the hot-bucket split (buckets past target split on
-    pmod(xxhash64(vec_id, tbl), s)) — the candidate artifact must equal
-    a from-scratch recomputation of the bucket/split/probe rule over
-    the model's own hashes. The unpatched path is pinned separately:
-    contract-SF pair sets were verified bit-identical to the
-    pre-split code (r10), and the recall floor test above runs the
-    default constants."""
+    pmod(xxhash64(vec_id, tbl), s)) — the engine's candidate pairs must
+    equal a from-scratch Python recomputation of the bucket/split/probe
+    rule, with the ±1 projection signs derived here independently from
+    md5('lsh:<t>:<d>'). The unpatched path is pinned by the key's DuckDB
+    oracle, and the recall floor test above runs the default
+    constants."""
+    import functools
+    import hashlib
     import math
+    import operator
     from collections import Counter, defaultdict
 
     import engine.similarity as S
-    from engine.similarity import _lsh_cand_path
 
     monkeypatch.setattr(S, "_LSH_TARGET_OCC", 100)
     monkeypatch.setattr(S, "_LSH_BUCKET_TARGET", 24)
-    QUERIES["sim_cosine_topk_lsh"](spark, SF_SMOKE).collect()
     got = {
         (r["query_id"], r["neighbor_id"])
-        for r in spark.read.parquet(_lsh_cand_path("sf0_001")).collect()
+        for r in S._lsh_pairs(
+            spark, SF_SMOKE, S._l2_norm(S.T(spark, SF_SMOKE, "embeddings"))
+        ).collect()
     }
 
-    # recompute from the same seeded model's hashes (the ml projection
-    # stays library-internal; the bucket/split/probe relation is ours)
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    def fold(xs):  # left fold from 0.0 — the order F.aggregate adds in
+        return functools.reduce(operator.add, xs, 0.0)
 
+    signs = [
+        [
+            1 if int(hashlib.md5(f"lsh:{t}:{d}".encode()).hexdigest()[0], 16) % 2 == 0
+            else -1
+            for d in range(64)
+        ]
+        for t in range(4)
+    ]
     emb = spark.read.parquet(SF_SMOKE + "/embeddings.parquet")
-    n = emb.count()
-    w = 0.5 * min(1.0, 100 / n)
-    assert w < 0.5  # multi-probe engaged
-    base = emb.select(
+    rows = emb.select(
         "vec_id",
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("raw"),
-    )
-    norm = Normalizer(inputCol="raw", outputCol="v", p=2.0).transform(base)
-    model = BucketedRandomProjectionLSH(
-        inputCol="v", outputCol="h", bucketLength=w, numHashTables=4, seed=42
-    ).fit(norm)
-    hashed = (
-        model.transform(norm)
-        .select("vec_id", F.posexplode("h").alias("tbl", "hv"))
-        .select(
-            "vec_id",
-            "tbl",
-            vector_to_array("hv")[0].alias("hkey"),
-            F.xxhash64("vec_id", "tbl").alias("h64"),
-        )
-        .collect()
-    )
-    size = Counter((r["tbl"], r["hkey"]) for r in hashed)
+        F.col("embedding").cast("array<double>").alias("e"),
+        *[F.xxhash64("vec_id", F.lit(t)).alias(f"h{t}") for t in range(4)],
+    ).collect()
+    w = 0.5 * min(1.0, 100 / len(rows))
+    assert w < 0.5  # multi-probe engaged
+    hashed = []  # (vec_id, tbl, hkey, h64)
+    for r in rows:
+        nrm = math.sqrt(fold(x * x for x in r["e"]))
+        en = [x / nrm for x in r["e"]]
+        for t in range(4):
+            hkey = math.floor(fold(x * g for x, g in zip(en, signs[t])) / 8 / w)
+            hashed.append((r["vec_id"], t, hkey, r[f"h{t}"]))
+    size = Counter((t, hk) for _v, t, hk, _h in hashed)
     s = {b: max(1, math.ceil(c / 24)) for b, c in size.items()}
     assert max(s.values()) > 1  # split engaged
     buckets = defaultdict(set)
-    h64 = {}
-    for r in hashed:
-        h64[(r["vec_id"], r["tbl"])] = r["h64"]
-        sb = s[(r["tbl"], r["hkey"])]
+    for v, t, hk, h in hashed:
         # python % on a positive modulus is nonnegative == F.pmod
-        buckets[(r["tbl"], r["hkey"], r["h64"] % sb)].add(r["vec_id"])
+        buckets[(t, hk, h % s[(t, hk)])].add(v)
     expected = set()
-    for r in hashed:
-        if r["vec_id"] >= 5:
+    for v, t, hk, h in hashed:
+        if v >= 5:
             continue
         for off in (-1, 0, 1):
-            b = (r["tbl"], r["hkey"] + off)
+            b = (t, hk + off)
             if b not in s:
                 continue
-            sub = h64[(r["vec_id"], r["tbl"])] % s[b]
-            for v in buckets[(b[0], b[1], sub)]:
-                if v != r["vec_id"]:
-                    expected.add((r["vec_id"], v))
+            expected |= {(v, u) for u in buckets[(*b, h % s[b])] if u != v}
     assert got == expected
 
 

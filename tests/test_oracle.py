@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import pathlib
 
 import pytest
 
@@ -57,6 +58,51 @@ def test_rows_only_runs(key, spark):
     df = QUERIES[key](spark, SF_ORACLE)
     assert df.columns, f"{key}: empty schema"
     assert df.count() >= 0
+
+
+#: keys whose oracle SQL reads an artifact under the repo's .scratch
+#: root — a relation only the Spark side of the key (or a sibling key)
+#: builds, so their gate passes only after something built it. The set
+#: may only shrink: retire a key by making its oracle read source tables
+#: alone, then drop it here; a newly pinned oracle fails the ratchet.
+_ARTIFACT_PINNED = (
+    "dedup_embedding",
+    "pipeline_ann_reassign",
+    "pipeline_ann_reindex",
+    "pipeline_ann_retrain_apply",
+    "pipeline_ann_retrain_gate",
+    "pipeline_incremental_dedup",
+    "pipeline_semdedup_keep_central",
+    "scan_binaryfile",
+    "scan_csv_malformed",
+    "scan_delete_vectors_apply",
+    "scan_manifest_snapshot",
+    "scan_manifest_time_travel",
+    "scan_manifest_vacuum_plan",
+    "scan_text_lines",
+    "sim_ann_partitioned_probe",
+    "sim_cosine_topk_ivf",
+    "sim_cosine_topk_ivf_pq",
+    "sim_knn_graph",
+    "sink_sorted_clustered_write",
+    "so_cluster_stats",
+    "so_kmeans",
+    "so_kmeans_ml",
+    "stream_ann_ingest",
+    "stream_ann_ingest_ttl",
+    "stream_stateful_session_timeout",
+    "stream_watermark_late",
+)
+
+
+def test_artifact_pinned_oracles_ratchet():
+    root = str(pathlib.Path(__file__).resolve().parent.parent / ".scratch") + "/"
+    pinned = {k for k, sql in ORACLES.items() if root in sql}
+    assert pinned == set(_ARTIFACT_PINNED), (
+        f"newly pinned: {sorted(pinned - set(_ARTIFACT_PINNED))}; "
+        f"no longer pinned (drop from _ARTIFACT_PINNED): "
+        f"{sorted(set(_ARTIFACT_PINNED) - pinned)}"
+    )
 
 
 def test_entry_smoke(spark):
