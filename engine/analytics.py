@@ -26,7 +26,13 @@ from pyspark.sql import Column
 
 from engine.canon import dround
 from engine.registry import register
-from engine.session import EVENTS_US_SQL, T, oracle_sf, sf_tag, tiny_df
+from engine.session import (
+    EVENTS_US_SQL,
+    T,
+    session_confs,
+    sf_tag,
+    tiny_df,
+)
 
 
 def _exact_sum2(expr: Column, scale: int = 10_000) -> Column:
@@ -1080,6 +1086,37 @@ def affinity_edge_parts(spark: SparkSession, sf: str) -> int:
     return max(1, min(cap, rows // 20_000 + 1))
 
 
+#: edge-count ceiling of the adaptive graph keys' driver path: the
+#: COUNTED edge list (already orders of magnitude smaller than the raw
+#: events) fits comfortably on the driver, so round after round of
+#: join+agg scheduler latency collapses into an exact driver loop —
+#: the driver-sized-state rule that lets k-means collect its means.
+#: Above it the key's distributed fixpoint runs; both paths compute
+#: the identical result (asserted in tests by forcing each path).
+GRAPH_DRIVER_EDGES = 2_000_000
+
+
+def driver_sized(edges: DataFrame) -> bool:
+    """Whether ``edges`` is counted (one Spark job) at or under
+    GRAPH_DRIVER_EDGES. The ceiling is read per call, so setting it to
+    0 forces every adaptive graph key onto its distributed path."""
+    return edges.count() <= GRAPH_DRIVER_EDGES
+
+
+def loop_shuffles(spark: SparkSession, n: int, per: int):
+    """:func:`engine.session.session_confs` block that right-sizes an
+    iterative graph loop's shuffles to its graph: ``n // per + 2``
+    partitions, at least 2 and capped by the session's own width.
+    Fixed 32-way shuffles over a frontier orders of magnitude smaller
+    than the fact are pure scheduler overhead × rounds. The DataFrame
+    API has no per-exchange width short of extra repartition shuffles,
+    so the loop holds the session conf; the driver contract runs
+    queries sequentially on a session, so no other build sees it."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = max(2, min(cap, n // per + 2))
+    return session_confs(spark, {"spark.sql.shuffle.partitions": str(width)})
+
+
 def affinity_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic user-affinity multigraph shared by graph_pagerank
     and graph_bfs_reachability (engine.tableh): within each
@@ -1204,8 +1241,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     from engine.session import scratch_cache
 
     edges = scratch_cache(materialize_affinity_edges(spark, sf))
-    n_edges = edges.count()
-    if n_edges <= _PAGERANK_DRIVER_EDGES:
+    if driver_sized(edges):
         ranks = _pagerank_driver(spark, edges)
     else:
         ranks = _pagerank_distributed(spark, edges)
@@ -1214,17 +1250,6 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("rank_ppm").desc(), "user_id")
         .limit(20)
     )
-
-
-#: edge-count ceiling for the driver path — same driver-sized-state rule
-#: as connected_components' union-find and k-means' collected means: the
-#: EDGE LIST (already orders of magnitude smaller than the raw events)
-#: fits comfortably on the driver, so 10 scheduler round-trips of
-#: join+agg latency collapse into a vectorized numpy loop. Above the
-#: ceiling the distributed fixpoint below runs instead (both paths
-#: compute the identical iteration sequence; equality is asserted in
-#: tests by forcing each path on the same graph).
-_PAGERANK_DRIVER_EDGES = 2_000_000
 
 
 def _pagerank_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -1236,7 +1261,7 @@ def _pagerank_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    pdf = edges.toPandas()  # bounded by _PAGERANK_DRIVER_EDGES
+    pdf = edges.toPandas()  # bounded by GRAPH_DRIVER_EDGES
     src = pdf["src"].to_numpy(np.int64)
     dst = pdf["dst"].to_numpy(np.int64)
     node_ids = np.unique(src)
@@ -1272,13 +1297,7 @@ def _pagerank_distributed(spark: SparkSession, edges: DataFrame) -> DataFrame:
     edges_deg = scratch_cache(edges.join(out_deg, "src"))
     nodes = scratch_cache(edges.select(F.col("src").alias("user_id")).distinct())
     n_nodes = nodes.count()  # driver-sized: one long
-    # right-size the loop's shuffles to the graph (the connected-
-    # components lesson: fixed 32-way shuffles over a node-sized
-    # frontier are pure scheduler overhead × iterations). Restored after.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = max(2, min(int(prev_parts), n_nodes // 5_000 + 2))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
+    with loop_shuffles(spark, n_nodes, 5_000):
         ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
         for _ in range(10):
             contribs = (
@@ -1300,8 +1319,6 @@ def _pagerank_distributed(spark: SparkSession, edges: DataFrame) -> DataFrame:
             # cut the lineage EAGERLY each round: with lazy checkpoints
             # the final action compiles all 10 rounds as one giant DAG
             ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return ranks
 
 
@@ -1485,57 +1502,43 @@ def join_aqe_skew(spark: SparkSession, sf: str) -> DataFrame:
     repartition since the toy files are one split, and (2) NO
     downstream operator requiring the join key's partitioning (the
     group key is o_orderpriority, not hot_key — grouping by the join
-    key would veto the rule). Thresholds are forced low to trigger at
-    toy scale and restored after planning; sums run in exact integer
+    key would veto the rule). AQE reads its skew thresholds when the
+    query EXECUTES, so they come from the caller's session: at scale
+    the stock AQE thresholds apply, and the plan gate
+    (tests/test_plans.py) holds toy-scale ones (broadcast off, 2 KB
+    skew threshold) around its collect. Sums run in exact integer
     units so the re-partitioned aggregation order can't change the
     result (which is the point: skew split must be invisible)."""
-    confs = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        ev = (
-            T(spark, sf, "events")
-            .repartition(16, "event_id")
-            .select(
-                F.when(F.col("user_id") < 120, 0)
-                .otherwise(F.col("user_id"))
-                .alias("hot_key"),
-                dround(F.col("value") * 1e6, 0).cast("long").alias("value_micros"),
-            )
+    ev = (
+        T(spark, sf, "events")
+        .repartition(16, "event_id")
+        .select(
+            F.when(F.col("user_id") < 120, 0)
+            .otherwise(F.col("user_id"))
+            .alias("hot_key"),
+            dround(F.col("value") * 1e6, 0).cast("long").alias("value_micros"),
         )
-        o = (
-            T(spark, sf, "orders")
-            .repartition(8, "o_orderkey")
-            .select(
-                (F.col("o_orderkey") % 150).alias("hot_key"),
-                "o_orderpriority",
-                dround(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                    "price_cents"
-                ),
-            )
+    )
+    o = (
+        T(spark, sf, "orders")
+        .repartition(8, "o_orderkey")
+        .select(
+            (F.col("o_orderkey") % 150).alias("hot_key"),
+            "o_orderpriority",
+            dround(F.col("o_totalprice") * 100, 0).cast("long").alias(
+                "price_cents"
+            ),
         )
-        return (
-            ev.join(o, "hot_key")
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_rows"),
-                (F.sum("value_micros") / F.lit(1e6)).alias("value_sum"),
-                (F.sum("price_cents") / F.lit(100.0)).alias("price_sum"),
-            )
+    )
+    return (
+        ev.join(o, "hot_key")
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_rows"),
+            (F.sum("value_micros") / F.lit(1e6)).alias("value_sum"),
+            (F.sum("price_cents") / F.lit(100.0)).alias("price_sum"),
         )
-    finally:
-        for k, v in prev.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2263,9 +2266,14 @@ def _malformed_csv_path(sf: str) -> str:
     return artifact_path("csv_malformed", sf, ("orders",))
 
 
+#: rows of the malformed-CSV fixture whose price is not a number
+_CSV_BAD_ROWS = 10
+
+
 def _malformed_csv_dir(spark: SparkSession, sf: str) -> str:
-    """Fixture: orders slice as CSV + 10 rows whose price column is not
-    a number (field count intact — the parser must flag, not skip)."""
+    """Fixture: orders slice as CSV + _CSV_BAD_ROWS rows whose price
+    column is not a number (field count intact — the parser must flag,
+    not skip)."""
     import os
 
     from engine.session import artifact
@@ -2280,33 +2288,25 @@ def _malformed_csv_dir(spark: SparkSession, sf: str) -> str:
         with open(os.path.join(tmp, "part-000.csv"), "w") as f:
             for r in rows:
                 f.write(f"{r['o_orderkey']},{r['o_orderstatus']},{r['o_totalprice']}\n")
-            for i in range(10):
+            for i in range(_CSV_BAD_ROWS):
                 f.write(f"{900000000 + i},X,not_a_number_{i}\n")
 
     return artifact(_malformed_csv_path(sf), build)
 
 
-def _csv_malformed_sql() -> str:
-    # lazy: the path embeds the orders-table fingerprint, which must be
-    # resolved when the driver runs, not at module import (ADVICE r7)
-    return f"""
-    WITH raw AS (
-      SELECT * FROM read_csv('{_malformed_csv_path(oracle_sf())}/part-000.csv',
-                             header = false, all_varchar = true,
-                             columns = {{'k': 'VARCHAR', 's': 'VARCHAR',
-                                         'p': 'VARCHAR'}})
-    )
-    SELECT CAST(SUM(CASE WHEN TRY_CAST(p AS DOUBLE) IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_good,
-           CAST(SUM(CASE WHEN TRY_CAST(p AS DOUBLE) IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt,
-           SUM(CAST(ROUND(TRY_CAST(p AS DOUBLE) * 100) AS BIGINT))
+#: the fixture's good rows are the 1-in-20 orders slice, written with
+#: each price's round-trip repr, plus _CSV_BAD_ROWS unparseable ones —
+#: so the audit triple follows from the source table alone
+_CSV_MALFORMED_SQL = f"""
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_good,
+           CAST({_CSV_BAD_ROWS} AS BIGINT) AS n_corrupt,
+           SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
              / CAST(100 AS DOUBLE) AS good_total
-    FROM raw
+    FROM orders WHERE o_orderkey % 20 = 0
 """
 
 
-@register("scan_csv_malformed", sql=_csv_malformed_sql)
+@register("scan_csv_malformed", sql=_CSV_MALFORMED_SQL)
 def scan_csv_malformed(spark: SparkSession, sf: str) -> DataFrame:
     """Malformed-input robustness — the ingestion property that decides
     whether one bad row kills a 100 TB load: PERMISSIVE mode parses what
@@ -2479,12 +2479,9 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy(day.alias("day"), F.col("event_type"))
         .agg(F.count("*").alias("n"))
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    overwrite = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    with session_confs(spark, overwrite):
         corr.write.mode("overwrite").partitionBy("day").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return back.select("day", "event_type", "n")
 

@@ -52,6 +52,7 @@ from engine.session import (
     artifact_path,
     data_fingerprint,
     scratch_dir,
+    session_confs,
     sf_tag,
     tiny_df,
 )
@@ -2477,15 +2478,11 @@ def join_runtime_bloom_filter(spark: SparkSession, sf: str) -> DataFrame:
     query only — the rule correctly skips broadcastable joins, but at
     toy scale everything is broadcastable, which would hide the shape
     being demonstrated. Plan gated in tests/test_plans.py."""
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_thr = spark.conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-    )
-    try:
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    }
+    with session_confs(spark, confs):
         o = T(spark, sf, "orders").filter(F.col("o_totalprice") > 400000.0)
         li = T(spark, sf, "lineitem")
         df = (
@@ -2498,16 +2495,10 @@ def join_runtime_bloom_filter(spark: SparkSession, sf: str) -> DataFrame:
         )
         # materialize the physical plan while the confs are active —
         # QueryExecution caches it, so the bloom filter survives the
-        # conf restore below (plans are lazy; without this the plan
-        # would be compiled later under default confs)
+        # conf restore when the block ends (plans are lazy; without
+        # this the plan would be compiled later under default confs)
         df._jdf.queryExecution().executedPlan()
-        return df
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            prev_thr,
-        )
+    return df
 
 
 _MAXBY_SQL = """

@@ -9,6 +9,7 @@ mode — at cluster scale these come from spark-submit conf instead).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,6 +99,26 @@ def tune(spark: SparkSession) -> None:
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
     _TUNED_SESSIONS.add(spark)
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the block, then put each back to its previous
+    value — or unset it if it was unset — even when the block raises.
+    The one place engine code changes a session conf for a block of
+    work (the plan-time confs of a query, a right-sized loop shuffle
+    width, a streaming query's start)."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

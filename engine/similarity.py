@@ -1040,14 +1040,16 @@ def dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 20, driver_threshold: int = 200_000
-) -> DataFrame:
+#: edge-count ceiling of connected_components' driver union-find
+_CC_DRIVER_EDGES = 200_000
+
+
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components with an ADAPTIVE physical strategy (the AQE
     idea applied to an iterative algorithm): cluster id = smallest
     doc_id reachable.
 
-    - Edge set ≤ driver_threshold: union-find on the driver. Candidate
+    - Edge set ≤ _CC_DRIVER_EDGES: union-find on the driver. Candidate
       pairs are orders of magnitude smaller than the corpus (that is
       the point of blocking), so this is the same driver-sized-state
       rule that lets k-means collect its k means — and it removes ~10
@@ -1061,6 +1063,8 @@ def connected_components(
     asserted in tests on planted graphs).
 
     pairs: (a, b) undirected edges."""
+    from engine.analytics import loop_shuffles
+
     # cache the INPUT before symmetrizing: both union branches reference
     # the pair DAG, and without this the upstream candidate join (the
     # expensive part of every caller) executes twice
@@ -1074,7 +1078,7 @@ def connected_components(
     spark = pairs.sparkSession
     n_edges = edges.count()
     pairs.unpersist()
-    if n_edges <= driver_threshold:
+    if n_edges <= _CC_DRIVER_EDGES:
         parent: dict = {}
 
         def find(u):
@@ -1083,7 +1087,7 @@ def connected_components(
                 u = parent[u]
             return u
 
-        rows = edges.collect()  # bounded by driver_threshold
+        rows = edges.collect()  # bounded by _CC_DRIVER_EDGES
         for r in rows:
             x, y = r["x"], r["y"]
             parent.setdefault(x, x)
@@ -1097,44 +1101,44 @@ def connected_components(
         out = [(n, find(n)) for n in parent]
         edges.unpersist()
         return tiny_df(spark, out, "node long, label long")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = max(2, min(int(prev_parts), n_edges // 20_000 + 2))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    # labels start as self
-    labels = edges.select(F.col("x").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    prev_sum = None
-    for _ in range(max_iter):
-        # candidate label via neighbors: min(label of y) for each x
-        neigh = (
-            edges.join(labels, edges.y == labels.node)
-            .groupBy("x")
-            .agg(F.min("label").alias("nlabel"))
+    with loop_shuffles(spark, n_edges, 20_000):
+        # labels start as self
+        labels = (
+            edges.select(F.col("x").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
         )
-        new_labels = (
-            labels.join(neigh, labels.node == neigh.x, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
+        prev_sum = None
+        for _ in range(max_iter):
+            # candidate label via neighbors: min(label of y) for each x
+            neigh = (
+                edges.join(labels, edges.y == labels.node)
+                .groupBy("x")
+                .agg(F.min("label").alias("nlabel"))
             )
-        )
-        # localCheckpoint truncates the per-iteration lineage chain —
-        # without it the plan (and its recompute cost on executor loss)
-        # grows linearly with iterations
-        new_labels = new_labels.localCheckpoint(eager=True)
-        # min-label propagation only ever DECREASES labels, so the label
-        # sum is a strictly monotone convergence witness — one cheap
-        # aggregate instead of a join + count per iteration
-        new_sum = new_labels.agg(F.sum("label")).first()[0]
-        converged = prev_sum is not None and new_sum == prev_sum
-        prev_sum = new_sum
-        labels = new_labels
-        if converged:
-            break
-    spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            new_labels = (
+                labels.join(neigh, labels.node == neigh.x, "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"),
+                        F.coalesce(F.col("nlabel"), F.col("label")),
+                    ).alias("label"),
+                )
+            )
+            # localCheckpoint truncates the per-iteration lineage chain —
+            # without it the plan (and its recompute cost on executor loss)
+            # grows linearly with iterations
+            new_labels = new_labels.localCheckpoint(eager=True)
+            # min-label propagation only ever DECREASES labels, so the label
+            # sum is a strictly monotone convergence witness — one cheap
+            # aggregate instead of a join + count per iteration
+            new_sum = new_labels.agg(F.sum("label")).first()[0]
+            converged = prev_sum is not None and new_sum == prev_sum
+            prev_sum = new_sum
+            labels = new_labels
+            if converged:
+                break
     edges.unpersist()
     return labels
 

@@ -48,7 +48,6 @@ from __future__ import annotations
 
 import json
 import os
-from contextlib import contextmanager
 from typing import Callable
 from urllib.parse import urlsplit
 
@@ -71,6 +70,7 @@ from engine.session import (
     artifact_path,
     oracle_sf,
     scratch_dir,
+    session_confs,
     sf_tag,
 )
 from engine.session import tiny_df as _tiny_df
@@ -236,8 +236,8 @@ def _write_slices(
 
 def _replay_path(sf: str, late: bool) -> str:
     """Fixture location (:func:`engine.session.artifact_path` on the
-    events table) — the artifact-pinned watermark oracles read these
-    slice files by absolute path."""
+    events table) — the artifact-pinned stream_watermark_late oracle
+    reads the late slice files by absolute path."""
     return artifact_path("stream_replay_pq", sf, ("events",), "late" if late else "")
 
 
@@ -323,23 +323,6 @@ def _fs_manager_safe(root: str | None) -> bool:
     return root is None or urlsplit(root).scheme in ("", "file")
 
 
-@contextmanager
-def _session_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set ``confs`` for the block, then put each back to its previous
-    value — or unset it if it was unset — even when the block raises."""
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def _run_stream(
     stream_df: DataFrame,
     sink: Callable,
@@ -371,7 +354,7 @@ def _run_stream(
     w = sink(stream_df.writeStream)
     if checkpoint is not None:
         w = w.option("checkpointLocation", checkpoint)
-    with _session_confs(spark, settings):
+    with session_confs(spark, settings):
         w.trigger(availableNow=True).start().awaitTermination()
 
 
@@ -867,22 +850,22 @@ def _session_timeout_fn(key, pdfs, state: GroupState):
         yield pd.DataFrame(rows, columns=["user_id", "session_start_us", "n_events"])
 
 
-def _session_timeout_oracle_sql() -> str:
-    """The custom stateful sessionizer replayed in pure SQL over the
-    slice files (artifact-pinned; fixture SF from SPARK_GRAFT_ORACLE_SF
-    like the scan oracles, driver default sf0.01): gap-islands
-    give every session; a session reaches the APPEND sink iff
-    (a) it is not its user's last (a later event past the gap emitted
-    it from handleInputRows — batch placement is irrelevant to
-    membership), or (b) the EVENT-TIME TIMER fired: the final eviction
-    watermark (max event-time over all batches, ms-floored, minus the
-    10-min delay — availableNow runs one last empty batch because the
-    final data batch advanced the watermark) passed last_seen + gap.
-    Users still active within (gap + delay) of stream end keep their
-    last session open forever — exactly the unbounded-stream truth."""
-    path = _replay_path(oracle_sf(), late=False)
-    return f"""
-    WITH sl AS (SELECT * FROM read_parquet('{path}/*.parquet')),
+#: the custom stateful sessionizer replayed in pure SQL over the events
+#: the slice files are cut from (every event, in event-time order; the
+#: replay's batch boundaries never change membership): gap-islands give
+#: every session; a session reaches the APPEND sink iff (a) it is not
+#: its user's last (a later event past the gap emitted it from
+#: handleInputRows — batch placement is irrelevant to membership), or
+#: (b) the EVENT-TIME TIMER fired: the final eviction watermark (max
+#: event-time over all batches, ms-floored, minus the 10-min delay —
+#: availableNow runs one last empty batch because the final data batch
+#: advanced the watermark) passed last_seen + gap. Users still active
+#: within (gap + delay) of stream end keep their last session open
+#: forever — exactly the unbounded-stream truth.
+_SESSION_TIMEOUT_SQL = f"""
+    WITH sl AS (
+      SELECT user_id, epoch_us(ts) AS ts_us FROM ({EVENTS_US_SQL})
+    ),
     wmf AS (SELECT MAX(ts_us) // 1000 - {_WM_DELAY_MS} AS w FROM sl),
     seq AS (
       SELECT user_id, ts_us,
@@ -913,7 +896,7 @@ def _session_timeout_oracle_sql() -> str:
 """
 
 
-@register("stream_stateful_session_timeout", sql=_session_timeout_oracle_sql)
+@register("stream_stateful_session_timeout", sql=_SESSION_TIMEOUT_SQL)
 def stream_stateful_session_timeout(spark: SparkSession, sf: str) -> DataFrame:
     """Sessionization as a CUSTOM stateful operator with EVENT-TIME
     TIMEOUT — the state-lifecycle quadrant the other stream_* keys don't
@@ -928,7 +911,7 @@ def stream_stateful_session_timeout(spark: SparkSession, sf: str) -> DataFrame:
 
     FULLY VALUE-ORACLED (upgraded from rows-only): with deterministic
     batch boundaries the timer semantics are a pure function of the
-    slice files — see _session_timeout_oracle_sql. Validated
+    slice files — see _SESSION_TIMEOUT_SQL. Validated
     row-for-row at sf0.01 (9 540 emitted sessions), including the 141
     final sessions that ONLY the event-time timer emits (fired in the
     final empty batch availableNow runs after the watermark advanced) —
@@ -1369,7 +1352,7 @@ def _compact_ledger_buckets(
     if not due:
         return 0
     overwrite = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    with _session_confs(sp, overwrite):
+    with session_confs(sp, overwrite):
         df = sp.read.option("basePath", root).parquet(*[str(d) for d in due])
         if retain is not None:
             # retention-applying compaction (the TTL cascade): expired

@@ -422,17 +422,12 @@ def graph_bfs_reachability(spark: SparkSession, sf: str) -> DataFrame:
     match pins both the graph construction and the traversal. MIN(hop)
     over all (node, level) sightings equals the BFS level on both
     engines."""
-    from engine.analytics import materialize_affinity_edges
+    from engine.analytics import driver_sized, materialize_affinity_edges
 
     edges = scratch_cache(materialize_affinity_edges(spark, sf))
-    if edges.count() <= _BFS_DRIVER_EDGES:
+    if driver_sized(edges):
         return _bfs_driver(spark, edges)
     return _bfs_distributed(spark, edges)
-
-
-#: same driver-sized-state ceiling as graph_pagerank's — the COUNTED
-#: edge list (not the corpus) must fit on the driver for the fast path.
-_BFS_DRIVER_EDGES = 2_000_000
 
 
 def _bfs_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -2242,12 +2237,11 @@ def _seen_state_path(sf: str) -> str:
     return artifact_path("dedup_state", sf, ("documents",), "seen")
 
 
-def _incremental_dedup_sql() -> str:
-    from engine.session import oracle_sf
-
-    path = _seen_state_path(oracle_sf())
-    return f"""
-    WITH seen AS (SELECT h FROM read_parquet('{path}/*.parquet')),
+_INCREMENTAL_DEDUP_SQL = """
+    WITH seen AS (
+      SELECT DISTINCT MD5(TRIM(LOWER(text))) AS h
+      FROM documents WHERE doc_id % 2 = 0
+    ),
     today AS (
       SELECT doc_id, source, MD5(TRIM(LOWER(text))) AS h
       FROM documents WHERE doc_id % 2 = 1
@@ -2265,7 +2259,7 @@ def _incremental_dedup_sql() -> str:
 """
 
 
-@register("pipeline_incremental_dedup", sql=_incremental_dedup_sql)
+@register("pipeline_incremental_dedup", sql=_INCREMENTAL_DEDUP_SQL)
 def pipeline_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental ingestion dedup — the shape a DAILY pipeline runs:
     yesterday's normalized content hashes are PERSISTED state (here the

@@ -480,7 +480,9 @@ def _kcore_oracle_sql() -> str:
 
 
 @register("graph_kcore_peel", sql=_kcore_oracle_sql)
-def graph_kcore_peel(spark: SparkSession, sf: str) -> DataFrame:
+def graph_kcore_peel(
+    spark: SparkSession, sf: str, distributed: bool = False
+) -> DataFrame:
     """Fixed-round k-core peeling (k=3, 8 rounds) over the shared
     affinity graph, reporting the per-round (nodes, edges) trajectory —
     the standard dense-subgraph / spam-cluster primitive, and the
@@ -502,8 +504,10 @@ def graph_kcore_peel(spark: SparkSession, sf: str) -> DataFrame:
     that only ever SHRINKS, with localCheckpoint(eager) cutting the
     per-round lineage. Both paths compute the identical integer
     trajectory; both run all 8 rounds whether or not the peel has
-    converged, mirroring the oracle's fixed CTE chain."""
-    from engine.analytics import materialize_affinity_edges
+    converged, mirroring the oracle's fixed CTE chain.
+    ``distributed=True`` skips the count and forces the distributed
+    peel (graph_kcore_distributed)."""
+    from engine.analytics import driver_sized, materialize_affinity_edges
     from engine.session import scratch_cache
 
     edges = materialize_affinity_edges(spark, sf)
@@ -512,7 +516,7 @@ def graph_kcore_peel(spark: SparkSession, sf: str) -> DataFrame:
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         ).distinct()
     )
-    if und.count() <= _KCORE_DRIVER_EDGES:
+    if not distributed and driver_sized(und):
         traj = _kcore_driver(und)
     else:
         traj = _kcore_distributed(und)
@@ -530,24 +534,7 @@ def graph_kcore_distributed(spark: SparkSession, sf: str) -> DataFrame:
     key so the external sweep certifies the scale path, not just the
     collected-edge twin. Identical oracle: the peel trajectory is a
     pure integer function of the simple edge set."""
-    from engine.analytics import materialize_affinity_edges
-    from engine.session import scratch_cache
-
-    edges = materialize_affinity_edges(spark, sf)
-    und = scratch_cache(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        ).distinct()
-    )
-    traj = _kcore_distributed(und)
-    return tiny_df(
-        spark, traj, "round int, nodes_alive long, edges_alive long"
-    ).orderBy("round")
-
-
-#: counted ceiling for the driver path — same contract as
-#: graph_bfs_reachability's (the COUNTED edge list, not the corpus).
-_KCORE_DRIVER_EDGES = 2_000_000
+    return graph_kcore_peel(spark, sf, distributed=True)
 
 
 def _kcore_driver(und: DataFrame) -> list[tuple[int, int, int]]:
@@ -580,12 +567,10 @@ def _kcore_distributed(und: DataFrame) -> list[tuple[int, int, int]]:
     not the fact — the pagerank rule; builder-measured 4.2 → ~2 s at
     sf0.1. All counts exact integers, partition-count-invariant.
 
-    NOTE the right-sizing mutates spark.sql.shuffle.partitions for the
-    loop (finally-restored): the DataFrame API has no per-exchange
-    parallelism knob short of extra repartition shuffles. Safe because
-    the driver contract runs queries sequentially on the session (see
-    the matching note on tablej._bf_distributed); a concurrent builder
-    would use spark.newSession() for isolation."""
+    The right-sizing holds the session's shuffle width for the loop
+    (:func:`engine.analytics.loop_shuffles`)."""
+    from engine.analytics import loop_shuffles
+
     spark = und.sparkSession
 
     def counts(u: DataFrame) -> tuple[int, int]:
@@ -601,10 +586,7 @@ def _kcore_distributed(und: DataFrame) -> list[tuple[int, int, int]]:
 
     traj = []
     n0, m0 = counts(und)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = max(2, min(int(prev_parts), m0 // 20_000 + 2))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
+    with loop_shuffles(spark, m0, 20_000):
         for r in range(_KCORE_ROUNDS + 1):
             n, m = (n0, m0) if r == 0 else counts(und)
             traj.append((r, n, m))
@@ -623,8 +605,6 @@ def _kcore_distributed(und: DataFrame) -> list[tuple[int, int, int]]:
                 .select("a", "b")
                 .localCheckpoint(eager=False)
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return traj
 
 # --------------------------------------------------------------------------

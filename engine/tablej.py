@@ -275,11 +275,6 @@ def scan_compaction_plan(spark: SparkSession, sf: str) -> DataFrame:
 _LP_ROUNDS = 3
 _LP_TOP = 20
 
-#: same driver-sized-state ceiling as graph_pagerank/bfs — the COUNTED
-#: edge list (not the corpus) must fit on the driver for the fast path.
-_GRAPH_DRIVER_EDGES = 2_000_000
-
-
 def _lp_cte_sql() -> str:
     """The shared LPA prelude: events → affinity edges → undirected view
     → _LP_ROUNDS synchronous rounds, ending at lab{_LP_ROUNDS}. Both the
@@ -411,16 +406,10 @@ def _lp_und(edges: DataFrame) -> DataFrame:
     )
 
 
-def _lp_labels(spark: SparkSession, und: DataFrame) -> DataFrame:
-    """Adaptive per-node label relation (driver/distributed by counted
-    edge size — both paths compute the identical fixpoint)."""
-    if und.count() <= _GRAPH_DRIVER_EDGES:
-        return _lp_labels_driver(spark, und)
-    return _lp_labels_distributed(und)
-
-
 @register("graph_label_propagation", sql=_lp_oracle_sql)
-def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
+def graph_label_propagation(
+    spark: SparkSession, sf: str, distributed: bool = False
+) -> DataFrame:
     """Community detection by label propagation — 3 SYNCHRONOUS rounds
     over the undirected view of the shared affinity graph, each node
     adopting the modal neighbor label with a min-label tie-break (the
@@ -435,16 +424,13 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     than the graph costs to collect), larger ones run the distributed
     shape — per round ONE equi-join + count aggregate + per-node
     window, everything hashed on the node id. Both paths compute the
-    identical histogram (asserted in tests)."""
-    from engine.analytics import materialize_affinity_edges
+    identical histogram (asserted in tests). ``distributed=True`` skips
+    the count and forces the distributed shape
+    (graph_lp_distributed)."""
+    from engine.analytics import driver_sized, materialize_affinity_edges
 
-    edges = materialize_affinity_edges(spark, sf)
-    und = scratch_cache(
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
-    if und.count() <= _GRAPH_DRIVER_EDGES:
+    und = scratch_cache(_lp_und(materialize_affinity_edges(spark, sf)))
+    if not distributed and driver_sized(und):
         return _lp_driver(spark, und)
     return _lp_distributed(und)
 
@@ -460,11 +446,7 @@ def graph_lp_distributed(spark: SparkSession, sf: str) -> DataFrame:
     just the driver-exact twin it is equivalence-tested against.
     Identical oracle: both paths compute the same fixpoint because the
     rounds are synchronous and the tie-break is deterministic."""
-    from engine.analytics import materialize_affinity_edges
-
-    edges = materialize_affinity_edges(spark, sf)
-    und = scratch_cache(_lp_und(edges))
-    return _lp_distributed(und)
+    return graph_label_propagation(spark, sf, distributed=True)
 
 
 # --------------------------------------------------------------------------
@@ -530,27 +512,18 @@ def _bf_distributed(w: DataFrame) -> DataFrame:
     """K relaxation rounds, each one join + one min aggregate — the
     distributed Bellman-Ford shape (dist and edges hash on the node).
 
-    Loop shuffles are right-sized to the graph (the pagerank /
-    connected-components rule): a 4-round recurrence over a frontier
-    orders of magnitude smaller than the fact pays pure scheduler
-    overhead on stock 32-way exchanges — builder-measured 4.4 s → 1.8 s
-    at sf0.1 from this alone. Results are exact integers, invariant to
-    the partition count (pinned by the partition-invariance tests).
+    Loop shuffles are right-sized to the graph
+    (:func:`engine.analytics.loop_shuffles`): a 4-round recurrence over
+    a frontier orders of magnitude smaller than the fact pays pure
+    scheduler overhead on stock 32-way exchanges — measured 4.4 s →
+    1.8 s at sf0.1 from this alone. Results are exact integers,
+    invariant to the partition count (pinned by the
+    partition-invariance tests)."""
+    from engine.analytics import loop_shuffles
 
-    NOTE the loop right-sizes via session conf (set/finally-restore of
-    spark.sql.shuffle.partitions): exchange parallelism cannot be set
-    per-exchange from the DataFrame API without inserting extra
-    repartition shuffles. This assumes NO concurrent query builds on
-    the same SparkSession mid-loop — true under the driver contract
-    (queries run sequentially; registry.drain_scratch_caches marks the
-    boundary). A multi-tenant session would instead isolate via a
-    dedicated session (spark.newSession()) per loop."""
     spark = w.sparkSession
-    n_edges = w.count()  # scratch-cached by both callers: cheap
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = max(2, min(int(prev_parts), n_edges // 20_000 + 2))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
+    n_edges = w.count()  # scratch-cached by the caller: cheap
+    with loop_shuffles(spark, n_edges, 20_000):
         seeds = (
             w.select(F.col("src").alias("v"))
             .distinct()
@@ -568,14 +541,14 @@ def _bf_distributed(w: DataFrame) -> DataFrame:
             )
         # materialize under the loop conf (checkpoint returns the
         # materialized frame; the raw plan would otherwise execute
-        # after `finally` restores the stock partition count)
+        # after the block restores the session's partition count)
         return dist.orderBy("v").localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @register("graph_sssp_bellman_ford", sql=_bf_oracle_sql)
-def graph_sssp_bellman_ford(spark: SparkSession, sf: str) -> DataFrame:
+def graph_sssp_bellman_ford(
+    spark: SparkSession, sf: str, distributed: bool = False
+) -> DataFrame:
     """Weighted single-source(-set) shortest distances, bounded to 4
     relaxation rounds — distributed Bellman-Ford from the 3 smallest
     node ids over the affinity multigraph collapsed to weighted edges
@@ -588,14 +561,16 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf: str) -> DataFrame:
     lists run the exact Python relaxation; at scale each round is ONE
     equi-join (dist ⋈ edges on the node id) + one min aggregate, driver
     carrying only the round counter. The oracle unrolls the identical
-    recurrence, so every distance is value-checked."""
-    from engine.analytics import materialize_affinity_edges
+    recurrence, so every distance is value-checked.
+    ``distributed=True`` skips the count and forces the distributed
+    relaxation (graph_sssp_distributed)."""
+    from engine.analytics import driver_sized, materialize_affinity_edges
 
     edges = materialize_affinity_edges(spark, sf)
     w = scratch_cache(
         edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("wt"))
     )
-    if w.count() <= _GRAPH_DRIVER_EDGES:
+    if not distributed and driver_sized(w):
         return _bf_driver(spark, w)
     return _bf_distributed(w)
 
@@ -609,13 +584,7 @@ def graph_sssp_distributed(spark: SparkSession, sf: str) -> DataFrame:
     value-checks the scale path directly rather than only the
     driver-exact twin. Identical oracle: the recurrence is a pure
     function of the weighted edge list, so both paths agree exactly."""
-    from engine.analytics import materialize_affinity_edges
-
-    edges = materialize_affinity_edges(spark, sf)
-    w = scratch_cache(
-        edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("wt"))
-    )
-    return _bf_distributed(w)
+    return graph_sssp_bellman_ford(spark, sf, distributed=True)
 
 
 # --------------------------------------------------------------------------
@@ -848,11 +817,10 @@ def graph_modularity_lp(spark: SparkSession, sf: str) -> DataFrame:
     — integer numerator, ONE double division, then the canonical
     rounding. Every aggregation is partial-aggregable; the label join
     hashes on the node id twice (src side, dst side)."""
-    from engine.analytics import materialize_affinity_edges
+    from engine.analytics import driver_sized, materialize_affinity_edges
 
-    edges = materialize_affinity_edges(spark, sf)
-    und = scratch_cache(_lp_und(edges))
-    if und.count() <= _GRAPH_DRIVER_EDGES:
+    und = scratch_cache(_lp_und(materialize_affinity_edges(spark, sf)))
+    if driver_sized(und):
         # driver path: the edge list is already counted driver-sized, so
         # the LPA labels AND the modularity sums (all exact integers)
         # compute in one pass over the collected edges — one Spark job

@@ -320,12 +320,13 @@ def test_connected_components_planted_chain(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     """The driver union-find and the distributed min-label loop must
-    compute the IDENTICAL fixpoint (driver_threshold=0 forces the
+    compute the IDENTICAL fixpoint (a ceiling of 0 forces the
     distributed path on the same graph)."""
     import random
 
+    import engine.similarity as S
     from engine.similarity import connected_components
 
     rng = random.Random(13)
@@ -334,11 +335,32 @@ def test_connected_components_paths_agree(spark):
         "a long, b long",
     ).filter("a != b")
     fast = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
-    dist = {
-        r["node"]: r["label"]
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(S, "_CC_DRIVER_EDGES", 0)
+    dist = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
     assert fast == dist
+
+
+def test_connected_components_restores_confs_when_a_round_raises(
+    spark, monkeypatch
+):
+    """The distributed loop right-sizes spark.sql.shuffle.partitions for
+    its rounds; a round that raises must still hand the session back
+    with its own width, or every later query runs at the loop's."""
+    import pytest
+
+    import engine.similarity as S
+    from engine.session import session_confs
+
+    def boom(self, eager=True):
+        raise RuntimeError("round failed")
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "a long, b long")
+    monkeypatch.setattr(S, "_CC_DRIVER_EDGES", 0)
+    monkeypatch.setattr(type(pairs), "localCheckpoint", boom)
+    with session_confs(spark, {"spark.sql.shuffle.partitions": "7"}):
+        with pytest.raises(RuntimeError, match="round failed"):
+            S.connected_components(pairs)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
 
 
 def test_dedup_clusters_on_planted(spark):
@@ -421,7 +443,7 @@ def test_pagerank_paths_agree(spark, monkeypatch):
     import engine.analytics as A
 
     drv = [tuple(r) for r in QUERIES["graph_pagerank"](spark, SF_SMOKE).collect()]
-    monkeypatch.setattr(A, "_PAGERANK_DRIVER_EDGES", 0)
+    monkeypatch.setattr(A, "GRAPH_DRIVER_EDGES", 0)
     dist = [tuple(r) for r in QUERIES["graph_pagerank"](spark, SF_SMOKE).collect()]
     assert drv == dist
 

@@ -71,10 +71,8 @@ _ARTIFACT_PINNED = (
     "pipeline_ann_reindex",
     "pipeline_ann_retrain_apply",
     "pipeline_ann_retrain_gate",
-    "pipeline_incremental_dedup",
     "pipeline_semdedup_keep_central",
     "scan_binaryfile",
-    "scan_csv_malformed",
     "scan_delete_vectors_apply",
     "scan_manifest_snapshot",
     "scan_manifest_time_travel",
@@ -90,7 +88,6 @@ _ARTIFACT_PINNED = (
     "so_kmeans_ml",
     "stream_ann_ingest",
     "stream_ann_ingest_ttl",
-    "stream_stateful_session_timeout",
     "stream_watermark_late",
 )
 

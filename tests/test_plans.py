@@ -213,8 +213,10 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     """With skew thresholds forced low, AQE must split the hot
     partition at runtime: SortMergeJoin(skew=true) in the FINAL
     adaptive plan. Confs are held by the test across execution (the
-    query fn restores to whatever the caller set, and AQE reads these
-    at execution time, not plan time)."""
+    query fn sets none of them, and AQE reads these at execution time,
+    not plan time)."""
+    from engine.session import session_confs
+
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -222,17 +224,11 @@ def test_aqe_skew_join_splits_hot_partition(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with session_confs(spark, confs):
         df = QUERIES["join_aqe_skew"](spark, SF_SMOKE)
         df.collect()
         p = df._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in p, p
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
 
 
 def test_range_bucketed_join_is_equijoin(spark):

@@ -5,11 +5,14 @@
 inference round trip; the memo must (a) serve the identical schema,
 (b) key on the data fingerprint so a rewritten table re-infers, and
 (c) never leak across sf dirs. `tune` applies its session invariants
-once per live session object.
+once per live session object. Engine code changes a session conf for a
+block only through `session_confs`.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import shutil
 
 import engine.session as S
@@ -78,3 +81,26 @@ def test_tiny_df_one_partition(spark):
     assert [r["x"] for r in df.collect()] == [0, 1, 2, 3, 4]
     empty = tiny_df(spark, [], "x int, y long")
     assert empty.count() == 0 and len(empty.schema) == 2
+
+
+def test_session_confs_only_in_session_module():
+    """Every block-scoped conf change goes through
+    engine.session.session_confs, which restores the previous value even
+    when the block raises; a conf set/unset anywhere else in engine/
+    would bring back a hand-rolled restore (or none)."""
+    engine = pathlib.Path(__file__).resolve().parent.parent / "engine"
+    bad = []
+    for f in sorted(engine.glob("*.py")):
+        if f.name == "session.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            fn = getattr(node, "func", None)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(fn, ast.Attribute)
+                and fn.attr in ("set", "unset")
+                and isinstance(fn.value, ast.Attribute)
+                and fn.value.attr == "conf"
+            ):
+                bad.append(f"{f.name}:{node.lineno}")
+    assert not bad, bad

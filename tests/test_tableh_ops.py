@@ -168,12 +168,12 @@ def test_temperature_sample_flattens_distribution(spark, tmp_path):
 def test_bfs_paths_agree(spark, monkeypatch):
     """Driver (exact integer BFS) and distributed semi-naive paths must
     produce the identical level assignment on the same graph."""
-    import engine.tableh as H
+    import engine.analytics as A
 
     drv = sorted(
         tuple(r) for r in QUERIES["graph_bfs_reachability"](spark, SF_SMOKE).collect()
     )
-    monkeypatch.setattr(H, "_BFS_DRIVER_EDGES", 0)
+    monkeypatch.setattr(A, "GRAPH_DRIVER_EDGES", 0)
     dist = sorted(
         tuple(r) for r in QUERIES["graph_bfs_reachability"](spark, SF_SMOKE).collect()
     )
