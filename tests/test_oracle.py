@@ -62,9 +62,10 @@ def test_rows_only_runs(key, spark):
 
 #: keys whose oracle SQL reads an artifact under the repo's .scratch
 #: root — a relation only the Spark side of the key (or a sibling key)
-#: builds, so their gate passes only after something built it. The set
-#: may only shrink: retire a key by making its oracle read source tables
-#: alone, then drop it here; a newly pinned oracle fails the ratchet.
+#: builds. The pandas-safe gate below builds each listed key's artifact
+#: (by running the key) before it DESCRIBEs the oracle. The set may only
+#: shrink: retire a key by making its oracle read source tables alone,
+#: then drop it here; a newly pinned oracle fails the ratchet.
 _ARTIFACT_PINNED = (
     "dedup_embedding",
     "pipeline_ann_reassign",
@@ -119,11 +120,17 @@ def _is_nested(type_str: str) -> bool:
 
 
 @pytest.mark.parametrize("key", sorted(ORACLES))
-def test_oracle_output_types_pandas_safe(key, duck):
+def test_oracle_output_types_pandas_safe(key, duck, request):
     """Permanent gate for the r2 failure class: DuckDB HUGEINT output
     columns coerce to float64 in the driver's pandas canonicalizer while
     Spark emits int64 → guaranteed hash mismatch.  DESCRIBE every oracle
-    and reject HUGEINT (and other pandas-lossy types) at the source."""
+    and reject HUGEINT (and other pandas-lossy types) at the source.
+    An artifact-pinned oracle is described only after its key has built
+    the artifact it reads (the contract of ``engine.kmeans._assign_path``:
+    the Spark query runs before the oracle); every other case stays
+    JVM-free."""
+    if key in _ARTIFACT_PINNED:
+        QUERIES[key](request.getfixturevalue("spark"), SF_ORACLE)
     desc = duck.execute(f"DESCRIBE {ORACLES[key]}").fetchall()
     bad = [(c, t) for c, t, *_ in desc if "HUGEINT" in t.upper()]
     assert not bad, (
